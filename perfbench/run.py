@@ -1,13 +1,13 @@
 """Report-refresh benchmark for etl_cortex_spark.
 
-    python3 perfbench/run.py --workload cortex_report --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload cortex_report --seed 1 --seconds 20 --trace 0
 
 Run from the repository root. One client in one process runs whole
 reports back to back on ``local[nproc]`` (a closed loop, no think time):
 a fixed warm-up, then a window of ``--seconds`` of op time. With
 ``--trace 0`` the last stdout line holds the end-to-end metrics; with
-``--trace 1`` the run measures an untraced window and then a traced one,
-and reports per-layer self times, job counts and the tracing overhead.
+``--trace 1`` untraced and traced ops take turns in the window, and the
+run reports per-layer self times, job counts and the tracing overhead.
 Spans go to ``.perfbench_out/`` at the end of a traced run. Output checks
 run outside every timed window and outside ``setup_s``.
 """
@@ -138,11 +138,19 @@ def cpu_ms(pids: tuple[int, ...]) -> float:
     return ticks * 1e3 / os.sysconf("SC_CLK_TCK")
 
 
-def jvm_gc_ms(spark) -> float:
-    """Total collection time of the driver JVM so far (it hosts the
-    executors too, in local mode)."""
-    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-    return float(sum(b.getCollectionTime() for b in beans))
+def jvm_counters(spark) -> dict[str, float]:
+    """Running totals of the driver JVM (it hosts the executors too, in
+    local mode): garbage-collection ms, JIT-compiler ms summed over the
+    compiler threads, and classes Spark's code generator compiled. A
+    generated class the codegen cache misses is compiled, loaded and
+    then JIT-compiled afresh."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "gc_ms": float(sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())),
+        "jit_ms": float(mf.getCompilationMXBean().getTotalCompilationTime()),
+        "codegen_classes": float(codegen.METRIC_COMPILATION_TIME().getCount()),
+    }
 
 
 class Runner:
@@ -150,8 +158,8 @@ class Runner:
         self.wl, self.tr, self.spark = wl, tracer, spark
         self.next_op = 0
         self.calib: list[float] = []
-        #: op id -> JVM garbage-collection ms during the op
-        self.gc_ms: dict[int, float] = {}
+        #: op id -> growth of each ``jvm_counters`` total during the op
+        self.jvm: dict[int, dict[str, float]] = {}
         #: share of host CPU time stolen during the last window
         self.steal_pct = 0.0
         #: this process and the driver JVM, which runs the executors
@@ -165,7 +173,7 @@ class Runner:
         self.next_op += 1
         tr.enabled, tr.op = traced, op
         result = error = None
-        gc0, cpu0 = jvm_gc_ms(self.spark), cpu_ms(self.pids)
+        jvm0, cpu0 = jvm_counters(self.spark), cpu_ms(self.pids)
         t0 = time.perf_counter()
         try:
             with tr.span("op"):
@@ -179,32 +187,37 @@ class Runner:
             if traced:
                 self.spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
             self.cpu_ms[op] = cpu_ms(self.pids) - cpu0
-            self.gc_ms[op] = jvm_gc_ms(self.spark) - gc0
+            jvm1 = jvm_counters(self.spark)
+            self.jvm[op] = {k: jvm1[k] - v for k, v in jvm0.items()}
         return op, dt, result, error
 
     def window(self, seconds: float, alternate: bool) -> dict[bool, dict]:
-        """Closed loop until ``seconds`` of op time per kind of op; checks
-        run between ops, outside the op timer. With ``alternate`` the ops
-        take turns untraced and traced, so host drift hits both alike.
-        Returns untraced (False) and traced (True) op records."""
+        """Closed loop until ``seconds`` of op time; checks run between
+        ops, outside the op timer. With ``alternate`` the ops take turns
+        untraced and traced, so host drift hits both alike, and each kind
+        gets half of ``seconds``. Returns untraced (False) and traced
+        (True) op records."""
         kinds = (False, True) if alternate else (False,)
         rec = {k: {"busy": 0.0, "lat": [], "ops": [], "failed": 0} for k in kinds}
         steal0, total0 = cpu_ticks()
         n = 0
-        while min(rec[k]["busy"] for k in kinds) < seconds:
+        while min(rec[k]["busy"] for k in kinds) < seconds / len(kinds):
             traced = kinds[n % len(kinds)]
             n += 1
             op, dt, result, error = self.run_op(traced)
             r = rec[traced]
             r["busy"] += dt
             self.calib.append(calib_ms())
+            t_check = time.perf_counter()
+            errors = [error] if error else self.wl.check_op(result)
             print(
                 f"op {op}: {dt * 1e3:.1f} ms{' traced' if traced else ''}"
-                f" cpu {self.cpu_ms[op]:.0f} ms gc {self.gc_ms[op]:.0f} ms"
-                f" calib {self.calib[-1]:.1f} ms",
+                f" cpu {self.cpu_ms[op]:.0f} ms gc {self.jvm[op]['gc_ms']:.0f} ms"
+                f" jit {self.jvm[op]['jit_ms']:.0f} ms"
+                f" calib {self.calib[-1]:.1f} ms"
+                f" check {(time.perf_counter() - t_check) * 1e3:.0f} ms",
                 file=sys.stderr,
             )
-            errors = [error] if error else self.wl.check_op(result)
             for e in errors:
                 print(f"op {op}: check failed: {e}", file=sys.stderr)
             if errors:
@@ -249,11 +262,15 @@ def per_layer_metrics(wl, tr, runner, spark, plain: dict, traced: dict, setup: d
             per_op(lambda op, i=i: job_counts(sc, tr.groups[(op, "exec")])[i]), "count"
         )
     out["engine.job_floor_ms"] = metric(setup["floor_ms"], "ms")
-    out["jvm.gc_ms"] = metric(per_op(lambda op: runner.gc_ms[op]), "ms")
+    out["jvm.gc_ms"] = metric(per_op(lambda op: runner.jvm[op]["gc_ms"]), "ms")
+    out["jvm.jit_ms"] = metric(per_op(lambda op: runner.jvm[op]["jit_ms"]), "ms")
+    out["engine.codegen_classes_per_op"] = metric(
+        per_op(lambda op: runner.jvm[op]["codegen_classes"]), "count"
+    )
     out["op.cpu_ms"] = metric(per_op(lambda op: runner.cpu_ms[op]), "ms")
     query_ms = getattr(wl, "query_ms", {})
     for q in WAREHOUSE_QUERIES:
-        times = query_ms.get(q)
+        times = [query_ms[q][op] for op in plain["ops"]] if q in query_ms else []
         out[f"query.{q}.latency_ms"] = metric(statistics.median(times) if times else 0.0, "ms")
     for part in ("session", "inputs", "warmup"):
         out[f"setup.{part}_s"] = metric(setup[part], "s")
@@ -310,12 +327,16 @@ def main() -> int:
         t_inputs = time.perf_counter()
         tr = Tracer()
         runner = Runner(wl, tr, spark)
-        for _ in range(wl.warmup_ops):
+        for i in range(wl.warmup_ops):
             op, _dt, _result, error = runner.run_op(traced=False)
             if error:
                 raise RuntimeError(f"warm-up op {op} failed: {error}")
-        wl.after_warmup()
-        floor = job_floor_ms(spark)
+            if i == 0:
+                # here rather than after the warm-up: code these run for
+                # the first time makes the JIT recompile, and the next
+                # warm-up op, not the first timed one, absorbs that
+                wl.after_first_op()
+                floor = job_floor_ms(spark)
         t_first = time.perf_counter()
         setup = {
             "session": t_session - T_START,
@@ -327,7 +348,9 @@ def main() -> int:
         rec = runner.window(args.seconds, alternate=bool(args.trace))
         plain, traced = rec[False], rec.get(True)
         attempted, failed = plain["attempted"], plain["failed"]
+        t_check = time.perf_counter()
         run_errors = wl.check_run()
+        print(f"run checked in {time.perf_counter() - t_check:.1f} s", file=sys.stderr)
         if run_errors is not None:  # the run-level check counts as one op
             for e in run_errors:
                 print(f"run check failed: {e}", file=sys.stderr)
