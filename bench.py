@@ -204,8 +204,8 @@ def run_interleaved(
 ) -> tuple[float, float | None]:
     """One query's Spark AND DuckDB legs, ALTERNATING repetition by
     repetition in one process window (round-10 verdict #1: the
-    official record must carry the same evidentiary standard as
-    tools/ab_round10.py). Sequential blocks let a host-load spike land
+    official record must carry the same evidentiary standard as the
+    round-10 interleaved A/B). Sequential blocks let a host-load spike land
     on one engine only — three rounds produced false verdicts that
     way; interleaving makes any drift hit both legs symmetrically, so
     best-of-N picks each engine's clean run from the SAME window.
@@ -484,7 +484,7 @@ def main() -> None:
 
     # Interleaved official window (round-10 verdict #1): per query the
     # Spark and DuckDB legs alternate repetition by repetition — the
-    # discipline tools/ab_round10.py proved is the only window-proof
+    # discipline the round-10 A/B proved is the only window-proof
     # measurement on this host. One DuckDB warm-up pass per query is
     # paid before its timed reps (symmetric with Spark's session-level
     # warm_up above — the first DuckDB execution of a view pays the

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators import cleaning as C
+from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.operators.quantiles import exact_percentile_disc
 from etl_cortex_spark.queries import T, query
 
@@ -474,9 +475,7 @@ def b20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         zscore_anomalies(daily)
         .withColumn("day", F.col("day").cast("timestamp"))
-        # bounded anomaly frame: local sort, no sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("event_type", "day")
+        .transform(bounded_sort, "event_type", "day", max_rows=5 * 30)
     )
 
 
@@ -513,9 +512,7 @@ def b21(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.filter(F.col("next_type").isNotNull())
         .groupBy("event_type", "next_type")
         .agg(F.count(F.lit(1)).alias("n"))
-        # event-type matrix (k^2 rows): local sort
-        .repartition(1)
-        .sortWithinPartitions("event_type", "next_type")
+        .transform(bounded_sort, "event_type", "next_type", max_rows=5 * 5)
     )
 
 
@@ -579,9 +576,7 @@ def b13c(spark: SparkSession, sf_dir: str) -> DataFrame:
             "val",
             "val_interp",
         )
-        # k x days frame: local sort, no sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("event_type", "day")
+        .transform(bounded_sort, "event_type", "day", max_rows=5 * 30)
     )
 
 
@@ -644,9 +639,7 @@ def b22(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.round("total", 2) == F.col("ftotal"))
             ).alias("matches_full"),
         )
-        # 3-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("o_orderstatus")
+        .transform(bounded_sort, "o_orderstatus", max_rows=3)
     )
 
 
@@ -892,9 +885,7 @@ def b27(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("report_day")
         .agg(F.countDistinct("user_id").alias("wau"))
         .select(F.col("report_day").cast("timestamp").alias("report_day"), "wau")
-        # 30-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("report_day")
+        .transform(bounded_sort, "report_day", max_rows=30)
     )
 
 
@@ -995,9 +986,7 @@ def b29(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("l_extendedprice").alias("lo"),
             F.max("l_extendedprice").alias("hi"),
         )
-        # 4-row output: local sort, no range exchange
-        .repartition(1)
-        .sortWithinPartitions("bucket")
+        .transform(bounded_sort, "bucket", max_rows=4)
     )
 
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators.asof import asof_join
-from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.localframe import bounded_sort, local_df
 from etl_cortex_spark.operators.quantiles import exact_percentile_disc
 from etl_cortex_spark.queries import T, query
 
@@ -76,9 +76,7 @@ def c10(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
         )
-        # |segment| rows: local sort == global order, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("c_mktsegment")
+        .transform(bounded_sort, "c_mktsegment", max_rows=5)
     )
 
 
@@ -299,10 +297,7 @@ def c17(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        # 4 flag×status rows: local sort == global order, no range
-        # exchange (its boundary sampling is a separate job per run)
-        .coalesce(1)
-        .sortWithinPartitions("l_returnflag", "l_linestatus")
+        .transform(bounded_sort, "l_returnflag", "l_linestatus", max_rows=3 * 2)
     )
 
 
@@ -479,14 +474,7 @@ def c23(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.median("l_quantity"), 2).alias("med_qty"),
             F.round(F.percentile("l_extendedprice", 0.9), 2).alias("p90_price"),
         )
-        # 3-row output: local sort, no range exchange — the range
-        # partitioner's sampling pass re-executes the whole aggregate
-        # child. repartition(1), NOT coalesce(1): coalesce would
-        # absorb the final agg's 4 merge tasks into one, serializing
-        # the percentile-buffer merges (measured 1.34 s orderBy /
-        # 1.00 s coalesce / 0.62 s repartition at sf0.1, round 19)
-        .repartition(1)
-        .sortWithinPartitions("l_returnflag")
+        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -509,9 +497,7 @@ def c24(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "priorities"
             )
         )
-        # 3-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("o_orderstatus")
+        .transform(bounded_sort, "o_orderstatus", max_rows=3)
     )
 
 
@@ -1155,9 +1141,7 @@ def c54(spark: SparkSession, sf_dir: str) -> DataFrame:
     stack = ", ".join(f"'{a}', '{b}', __c_{a}__{b}" for a, b in names)
     return (
         one.selectExpr(f"stack({len(names)}, {stack}) AS (col_a, col_b, corr)")
-        # 10-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("col_a", "col_b")
+        .transform(bounded_sort, "col_a", "col_b", max_rows=len(names))
     )
 
 
@@ -1200,9 +1184,7 @@ def c55(spark: SparkSession, sf_dir: str) -> DataFrame:
             n.alias("n_days"),
             F.round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6).alias("slope"),
         )
-        # 3-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("l_returnflag")
+        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -1237,9 +1219,7 @@ def c56(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         i.select(F.lit("intersect_all").alias("op"), "s", "n")
         .unionByName(e.select(F.lit("except_all").alias("op"), "s", "n"))
-        # 6-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("op", "s")
+        .transform(bounded_sort, "op", "s", max_rows=2 * 3)
     )
 
 
@@ -1277,7 +1257,7 @@ def c58(spark: SparkSession, sf_dir: str) -> DataFrame:
             "with_tax"
         ),
         F.col("l_returnflag").try_cast("double").alias("flag_as_num"),
-    ).repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber")
+    ).orderBy("l_orderkey", "l_linenumber")
 
 
 @query(
@@ -1407,8 +1387,7 @@ def c61(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_returnflag", "median_qty_disc", "p25_price_disc", "p75_price_disc"
         )
-        .repartition(1)
-        .sortWithinPartitions("l_returnflag")
+        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -1527,10 +1506,7 @@ def c64(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "p75_price"
             ),
         )
-        # 3-row output: local sort — orderBy's range sampling would
-        # re-execute the percentile-buffer aggregate (the c23 finding)
-        .repartition(1)
-        .sortWithinPartitions("l_returnflag")
+        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -1983,8 +1959,7 @@ def c76(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         parsed.select("p.o_orderkey", "p.o_totalprice", "p.o_orderpriority")
-        .repartition(1)
-        .sortWithinPartitions("o_orderkey")
+        .orderBy("o_orderkey")
     )
 
 
@@ -2017,7 +1992,7 @@ def c77(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every kept orderkey is positive, so MAX + key always overflows
         F.expr("try_add(9223372036854775807, l_orderkey)").alias("overflowed"),
         F.expr("try_element_at(split(l_returnflag, ' '), 99)").alias("elem99"),
-    ).repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber")
+    ).orderBy("l_orderkey", "l_linenumber")
 
 
 @query(

@@ -18,7 +18,7 @@ from etl_cortex_spark.operators import dedup as DD
 from etl_cortex_spark.operators import multimodal as MM
 from etl_cortex_spark.operators import similarity as SIM
 from etl_cortex_spark.operators import textops as TX
-from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.localframe import bounded_sort, local_df
 from etl_cortex_spark.queries import T, query
 
 # shared oracle SQL fragments (DuckDB): whitespace words + k-shingles,
@@ -210,9 +210,7 @@ def d02gr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("mutated "), F.col("text")).alias("text"),
     )
     base = docs.unionByName(verbatim).unionByName(mutated)
-    return DD.group_rep_near_pairs(base, threshold=0.5).repartition(
-        1
-    ).sortWithinPartitions("id_a", "id_b")
+    return DD.group_rep_near_pairs(base, threshold=0.5).orderBy("id_a", "id_b")
 
 
 @query(
@@ -810,9 +808,7 @@ def d04(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("nb"), 4).alias("avg_bpe_tokens"),
             F.round(F.avg("nc"), 4).alias("avg_chars"),
         )
-        # |lang| rows: local sort == global order, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("lang")
+        .transform(bounded_sort, "lang", max_rows=5)
     )
 
 
@@ -926,13 +922,11 @@ def d04g(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel, zero shuffles before the ORDER BY (the
     same shuffle-free contract as the d04 family plan test)."""
     docs = T(spark, sf_dir, "documents")
-    # round 19, two plan-level changes (bit-equal outputs, oracle
-    # re-verified): (1) the token array is materialized ONCE and all
-    # three gram widths derive from it — the interpreted split+filter
-    # tokenizer was re-evaluated per signal (measured 1.8 s -> 0.9 s
-    # at sf0.1); (2) the trailing global orderBy became a local sort —
-    # its range-sampling pass re-executed the whole HOF chain
-    # (3.3 s -> 1.8 s).
+    # round 19 (bit-equal outputs, oracle re-verified): the token array
+    # is materialized ONCE and all three gram widths derive from it —
+    # the interpreted split+filter tokenizer was re-evaluated per
+    # signal (measured 1.8 s -> 0.9 s at sf0.1). The output is one row
+    # per document, so it keeps the distributed orderBy.
     w = F.col("__w")
     return (
         docs.select("doc_id", "text", TX.words("text").alias("__w"))
@@ -943,8 +937,7 @@ def d04g(spark: SparkSession, sf_dir: str) -> DataFrame:
             TX.top_ngram_frac("text", 3, words_col=w).alias("top3_frac"),
             TX.dup_ngram_frac("text", 5, words_col=w).alias("dup5_frac"),
         )
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
+        .orderBy("doc_id")
     )
 
 
@@ -990,14 +983,7 @@ def d05w(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``decode_image``), which genuinely need external libraries."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_wav_assets(docs)
-    # repartition(1).sortWithinPartitions THRESHOLD (round-20, the r19
-    # ADVICE): the local-sort pattern applies to outputs that fit one
-    # task with headroom (~100 MB / ≲100k rows at any supported SF) —
-    # k-row aggregates, sample-bounded frames, and the per-document
-    # feature frames of this family (≤5k rows/SF-0.1). Corpus-sized
-    # outputs (b17, b23, scale_*) keep the distributed range sort; at
-    # true 100 TB per-document scale these entries would too.
-    return MM.decode_wav_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_wav_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -1036,7 +1022,7 @@ def d05i(spark: SparkSession, sf_dir: str) -> DataFrame:
     Means are exact-integer-sum / count, emitted unrounded."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_bmp_assets(docs)
-    return MM.decode_bmp_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_bmp_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -1083,7 +1069,7 @@ def d05p(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-sum / count, emitted unrounded."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_png_assets(docs)
-    return MM.decode_png_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_png_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -1129,7 +1115,7 @@ def d05j(spark: SparkSession, sf_dir: str) -> DataFrame:
     value. Means are exact-integer-sum / count, emitted unrounded."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_jpeg_assets(docs)
-    return MM.decode_jpeg_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_jpeg_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -1211,7 +1197,7 @@ def d05cj(spark: SparkSession, sf_dir: str) -> DataFrame:
     (16-aligned, distinct from every other asset family)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_color_jpeg_assets(docs)
-    return MM.decode_color_jpeg_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_color_jpeg_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -1265,8 +1251,7 @@ def d05rz(spark: SparkSession, sf_dir: str) -> DataFrame:
     resized = MM.resize_bmp_nearest(assets, max_side=8)
     return (
         MM.decode_bmp_features(resized.select("asset_id", "payload"))
-        .repartition(1)
-        .sortWithinPartitions("asset_id")
+        .orderBy("asset_id")
     )
 
 
@@ -1314,7 +1299,7 @@ def d05avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     movi_bytes replays the frame-size closed form with a range join."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_avi_assets(docs)
-    return MM.parse_avi_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.parse_avi_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -1363,7 +1348,7 @@ def d05avif(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the pixel ramps with a 3-way range join."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_dib_avi_assets(docs)
-    return MM.decode_avi_frame_features(assets).repartition(1).sortWithinPartitions("asset_id", "frame_idx")
+    return MM.decode_avi_frame_features(assets).orderBy("asset_id", "frame_idx")
 
 
 @query(
@@ -1411,7 +1396,7 @@ def d05mp3(spark: SparkSession, sf_dir: str) -> DataFrame:
     a range join and the same 14-entry bitrate table."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp3_assets(docs)
-    return MM.parse_mp3_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.parse_mp3_features(assets).orderBy("asset_id")
 
 
 def _si_bits_sql(p: int, w: int) -> str:
@@ -1500,7 +1485,7 @@ def d05mp3si(spark: SparkSession, sf_dir: str) -> DataFrame:
     censuses (operators/multimodal.py:parse_mp3_sideinfo)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp3_assets(docs)
-    return MM.parse_mp3_sideinfo(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.parse_mp3_sideinfo(assets).orderBy("asset_id")
 
 
 @query(
@@ -1550,7 +1535,7 @@ def d05mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation raise loudly (pytest twins, tests/test_multimodal_wav.py)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mjpeg_avi_assets(docs)
-    return MM.decode_mjpeg_frame_features(assets).repartition(1).sortWithinPartitions("asset_id", "frame_idx")
+    return MM.decode_mjpeg_frame_features(assets).orderBy("asset_id", "frame_idx")
 
 
 @query(
@@ -1608,7 +1593,7 @@ def d05rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal.decode_image)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_rle8_avi_assets(docs)
-    return MM.decode_rle8_frame_features(assets).repartition(1).sortWithinPartitions("asset_id", "frame_idx")
+    return MM.decode_rle8_frame_features(assets).orderBy("asset_id", "frame_idx")
 
 
 @query(
@@ -1686,7 +1671,7 @@ def d05mp2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_mp2.py)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp2_assets(docs)
-    return MM.decode_mp2_subband_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_mp2_subband_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -1727,7 +1712,7 @@ def d05tar(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload running sum) as a window over the member sequence."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_tar_shards(docs)
-    return MM.tar_shard_manifest(assets).repartition(1).sortWithinPartitions("asset_id", "data_offset")
+    return MM.tar_shard_manifest(assets).orderBy("asset_id", "data_offset")
 
 
 @query(
@@ -1772,7 +1757,7 @@ def d05pj(spark: SparkSession, sf_dir: str) -> DataFrame:
     mp3-sample and video-codec decode remain stubbed."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_progressive_jpeg_assets(docs)
-    return MM.decode_progressive_jpeg_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_progressive_jpeg_features(assets).orderBy("asset_id")
 
 
 # --- D6-D8: streaming ---------------------------------------------------------
@@ -2030,7 +2015,7 @@ def d14(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(TX.top_word_frac("text"), 4).alias("top_word_frac"),
         TX.stopword_hits("text").alias("stopword_hits"),
         TX.gopher_pass("text").alias("keep"),
-    ).repartition(1).sortWithinPartitions("doc_id")
+    ).orderBy("doc_id")
 
 
 # --- D3+: int8 embedding quantization -----------------------------------------
@@ -2085,7 +2070,7 @@ def d16(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             < 1e-5
         ).alias("mse_below_tol"),
-    ).repartition(1).sortWithinPartitions("vec_id")
+    ).orderBy("vec_id")
 
 
 # --- D4+: corpus-trained trigram LM quality score -----------------------------
@@ -2121,8 +2106,7 @@ def d17(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round("mean_logprob", 4).alias("mean_logprob"),
         "n_trigrams",
-        # scored slice: local sort, no sampling re-execution
-    ).repartition(1).sortWithinPartitions("doc_id")
+    ).orderBy("doc_id")
 
 
 @query(
@@ -2343,16 +2327,9 @@ def d02pp(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1) — the output equals the exact bipartite pair set and the
     DuckDB string-gram twin is a full-strength oracle. Same ingest
     shape as d02_incremental_lsh_probe: a new batch of mutated copies
-    of every 20th doc probed against the whole existing corpus.
-
-    Trailing sort (round 11, interleaved A/B at sf0.1): the output is
-    batch-bounded tiny (~280 rows), so `repartition(1) +
-    sortWithinPartitions` replaces the global orderBy — one hash
-    exchange of the final rows instead of a range exchange plus its
-    sampling job, while upstream stages keep full parallelism
-    (best 0.45 s vs 0.80 s, every rep faster). NOT `coalesce(1)`:
-    with no shuffle boundary it would absorb the verify join into a
-    single task (measured 1.28 s — worse than the orderBy)."""
+    of every 20th doc probed against the whole existing corpus. The
+    batch is a fixed fraction of the corpus, so the pair output grows
+    with it and keeps the distributed orderBy."""
     docs = T(spark, sf_dir, "documents")
     existing = docs.select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 20 == 0).select(
@@ -2361,8 +2338,7 @@ def d02pp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         DD.prefix_filter_probe(existing, new, threshold=0.5)
-        .repartition(1)
-        .sortWithinPartitions("new_id", "existing_id")
+        .orderBy("new_id", "existing_id")
     )
 
 
@@ -2414,7 +2390,7 @@ def d02g(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return DD.minhash_lsh_probe(
         existing, new, threshold=0.5, num_hashes=32, bands=32
-    ).repartition(1).sortWithinPartitions("new_id", "existing_id")
+    ).orderBy("new_id", "existing_id")
 
 
 @query(
@@ -2728,11 +2704,9 @@ def d89(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup); md5-prefix hashing so the oracle selects the IDENTICAL
     fingerprints."""
     docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    # bounded fingerprint frame: local sort — orderBy's sampling pass
-    # would re-execute the whole HOF fingerprint chain (r19)
-    return TX.winnowing_fingerprints(docs, k=3, window=4).repartition(
-        1
-    ).sortWithinPartitions("doc_id", "fingerprint")
+    return TX.winnowing_fingerprints(docs, k=3, window=4).orderBy(
+        "doc_id", "fingerprint"
+    )
 
 
 _D92_SUMS = ", ".join(f"sum(qv[{i}])" for i in range(1, 65))
@@ -2894,7 +2868,7 @@ def d110warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Framing/magic/truncation violations raise loudly (pytest)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_warc_assets(docs)
-    return MM.parse_warc_responses(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.parse_warc_responses(assets).orderBy("asset_id")
 
 
 @query(
@@ -2949,7 +2923,7 @@ def d05gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel at 100 TB, the sanctioned escape hatch."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_gif_assets(docs)
-    return MM.decode_gif_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_gif_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -3023,7 +2997,7 @@ def d05mp3scf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-pinned."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp3_scf_assets(docs)
-    return MM.decode_mp3_scalefactors(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_mp3_scalefactors(assets).orderBy("asset_id")
 
 
 @query(
@@ -3143,7 +3117,7 @@ def d05rice(spark: SparkSession, sf_dir: str) -> DataFrame:
     overrun / unsupported order raise loudly (pytest)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_rice_audio_assets(docs)
-    return MM.decode_rice_audio_features(assets).repartition(1).sortWithinPartitions("asset_id")
+    return MM.decode_rice_audio_features(assets).orderBy("asset_id")
 
 
 @query(
@@ -3232,8 +3206,7 @@ def d08up(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("k").alias("n_keys"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("status")
+        .transform(bounded_sort, "status", max_rows=2)
     )
 
 
@@ -3437,8 +3410,7 @@ def d08tailmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__n").cast("bigint").alias("n_rows"),
             F.col("__sum_event_id").cast("bigint").alias("sum_eid"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("grp")
+        .transform(bounded_sort, "grp", max_rows=10)
     )
 
 

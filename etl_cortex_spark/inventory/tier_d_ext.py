@@ -18,7 +18,7 @@ from etl_cortex_spark.operators import llmprep as LP
 from etl_cortex_spark.operators import search as SR
 from etl_cortex_spark.operators import textops as TX
 from etl_cortex_spark.inventory.tier_d import _WORDS, _bucket_sql, _shingles_sql
-from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.localframe import bounded_sort, local_df
 from etl_cortex_spark.queries import T, query
 
 
@@ -46,7 +46,7 @@ def d18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """llmprep.chunk_documents: 64-word windows, 16-word overlap,
     stride 48. Pure generator expression — zero shuffles."""
     docs = T(spark, sf_dir, "documents")
-    return LP.chunk_documents(docs, size=64, overlap=16).repartition(1).sortWithinPartitions("doc_id", "chunk_id")
+    return LP.chunk_documents(docs, size=64, overlap=16).orderBy("doc_id", "chunk_id")
 
 
 # --- D19: BM25 lexical retrieval ----------------------------------------------
@@ -100,9 +100,7 @@ def d19ph(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = keep.unionByName(seeded)
     from etl_cortex_spark.operators.search import phrase_search
 
-    return phrase_search(base, "alpha beta").repartition(
-        1
-    ).sortWithinPartitions("doc_id")
+    return phrase_search(base, "alpha beta").orderBy("doc_id")
 
 
 @query(
@@ -182,9 +180,7 @@ def d20(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dup).alias("n_dup_grams"),
             F.round(F.sum(dup) / F.count(F.lit(1)), 4).alias("dup_frac"),
         )
-        # |docs|-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
+        .orderBy("doc_id")
     )
 
 
@@ -293,7 +289,7 @@ def d24a(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings")
     cents = CL.initial_centroids(emb, _CENTROID_K)
     out = CL.assign_centroids(emb, cents)
-    return out.select("vec_id", "cluster").repartition(1).sortWithinPartitions("vec_id")
+    return out.select("vec_id", "cluster").orderBy("vec_id")
 
 
 def _kmeans_oracle_sql(iters: int = 3, k: int = 8, q: int = 6) -> str:
@@ -442,8 +438,7 @@ def d25(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = CL.semantic_dedup(seeded, threshold=0.99, n_planes=6, seed=7)
     return (
         out.select("vec_id", "label", "bucket")
-        .repartition(1)
-        .sortWithinPartitions("vec_id")
+        .orderBy("vec_id")
     )
 
 
@@ -773,7 +768,7 @@ def d26(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return best_fuzzy_match(
         pairs, left_id="dirty_id", right_id="c_custkey"
-    ).repartition(1).sortWithinPartitions("dirty_id")
+    ).orderBy("dirty_id")
 
 
 # --- D8 extension: stream-stream interval join --------------------------------
@@ -929,8 +924,7 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = pagerank(edges, nodes, iters=3, damping=0.85)
     return (
         pr.select("node", F.round("pr", 6).alias("pr"))
-        .repartition(1)
-        .sortWithinPartitions("node")
+        .transform(bounded_sort, "node", max_rows=25)
     )
 
 
@@ -1030,7 +1024,7 @@ def d29(spark: SparkSession, sf_dir: str) -> DataFrame:
         (30.0 + (F.col("doc_id") % 7) * 10.0).alias("duration_s"),
         (24 + (F.col("doc_id") % 2) * 6).cast("double").alias("fps"),
     )
-    return plan_frame_samples(assets, every_s=2.0, max_frames=8).repartition(1).sortWithinPartitions(
+    return plan_frame_samples(assets, every_s=2.0, max_frames=8).orderBy(
         "asset_id", "sample_idx"
     )
 
@@ -1069,7 +1063,7 @@ def d30(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return plan_audio_chunks(
         assets, window_s=5, sample_rate=16_000, bytes_per_sample=2
-    ).repartition(1).sortWithinPartitions("asset_id", "chunk_id")
+    ).orderBy("asset_id", "chunk_id")
 
 
 # --- D31: entity resolution end-to-end (fuzzy pairs -> clusters -> canonical) -
@@ -1275,9 +1269,9 @@ def d36(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = ed.crossJoin(
         F.broadcast(ed.agg(F.avg("w").alias("avg_w")))
     ).filter(F.col("w") > F.col("avg_w"))
-    return triangle_count(cut, order_by_degree=True).repartition(
-        1
-    ).sortWithinPartitions("node")
+    return bounded_sort(
+        triangle_count(cut, order_by_degree=True), "node", max_rows=25
+    )
 
 
 def _pq_oracle(m: int = 4, k: int = 8, d_sub: int = 16) -> str:
@@ -1384,7 +1378,7 @@ def d37(spark: SparkSession, sf_dir: str) -> DataFrame:
     return codes.select(
         "vec_id",
         *[F.col("codes")[j].alias(f"code{j}") for j in range(4)],
-    ).repartition(1).sortWithinPartitions("vec_id")
+    ).orderBy("vec_id")
 
 
 # --- D56: hybrid lexical+vector retrieval (RRF) -------------------------------
@@ -1578,9 +1572,7 @@ def d77(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("a_orders").cast("double") * F.col("b_orders"))
             ).alias("lift"),
         )
-        # 20-row output: local sort, no range-sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions(F.desc("pair_orders"), "part_a", "part_b")
+        .transform(bounded_sort, F.desc("pair_orders"), "part_a", "part_b", max_rows=20)
     )
 
 

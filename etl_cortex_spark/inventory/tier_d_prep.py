@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from etl_cortex_spark.inventory.tier_d import _WORDS, _bucket_sql, _shingles_sql
 from etl_cortex_spark.operators import llmprep as LP
 from etl_cortex_spark.operators import textops as TX
-from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.localframe import bounded_sort, local_df
 from etl_cortex_spark.queries import T, query
 
 
@@ -220,9 +220,7 @@ def d13(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", TX.n_tokens("text").alias("n_tokens")
     )
-    return LP.pack_sequences(docs, max_tokens=2048).repartition(
-        1
-    ).sortWithinPartitions("bin_id", "doc_id")
+    return LP.pack_sequences(docs, max_tokens=2048).orderBy("bin_id", "doc_id")
 
 
 @query(
@@ -319,9 +317,7 @@ def d15(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text"), F.lit("\n"), F.lit("click here to subscribe now")
         ).alias("text"),
     )
-    return LP.line_dedup(seeded, min_count=3).repartition(
-        1
-    ).sortWithinPartitions("doc_id")
+    return LP.line_dedup(seeded, min_count=3).orderBy("doc_id")
 
 
 @query(
@@ -619,7 +615,7 @@ def d53(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         docs.select("doc_id", TX.strip_markup(html).alias("text"))
-        .repartition(1).sortWithinPartitions("doc_id")
+        .orderBy("doc_id")
     )
 
 
@@ -705,7 +701,7 @@ def d54(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("doc_id") % 2 == 0, F.concat(F.lit("#frag"), d)).otherwise(""),
         )
     )
-    return docs.select("doc_id", TX.norm_url(url).alias("url")).repartition(1).sortWithinPartitions("doc_id")
+    return docs.select("doc_id", TX.norm_url(url).alias("url")).orderBy("doc_id")
 
 
 # --- D55: BPE pair-count step -------------------------------------------------
@@ -894,7 +890,7 @@ def d62(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = assigned.filter(F.col("split") == "test").select("text")
     return LP.contamination_check(
         train, test, k=8, min_overlap=0.05
-    ).repartition(1).sortWithinPartitions("doc_id")
+    ).orderBy("doc_id")
 
 
 # --- D63: hashed-feature linear quality classifier ---------------------------
@@ -1234,10 +1230,7 @@ def d91(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("n_candidates") / F.greatest("n_grams", F.lit(1)), 6),
         )
         .filter(F.col("bloom_overlap") >= 0.5)
-        # flagged slice: local sort, no range-sampling re-execution of
-        # the per-gram md5 probe chain (r19)
-        .repartition(1)
-        .sortWithinPartitions("doc_id")
+        .orderBy("doc_id")
     )
 
 
@@ -1773,7 +1766,7 @@ def d106(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join("ids", ",").alias("ids_csv"),
         "n_tokens",
         "n_unk",
-    ).repartition(1).sortWithinPartitions("doc_id")
+    ).orderBy("doc_id")
 
 
 @query(
@@ -1977,7 +1970,7 @@ def d109(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("doc_id") % 11 == 0, F.lit("\x07")).otherwise(F.lit("")),
         ).alias("text"),
     )
-    return TX.encoding_audit(seeded).repartition(1).sortWithinPartitions("doc_id")
+    return TX.encoding_audit(seeded).orderBy("doc_id")
 
 
 @query(
@@ -2035,9 +2028,7 @@ def d112deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("__toks").alias("sum_tokens"),
             F.min("__toks").alias("min_tokens"),
         )
-        # |sources|×10 output: local sort, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("source", "decile")
+        .transform(bounded_sort, "source", "decile", max_rows=20 * 10)
     )
 
 

@@ -415,7 +415,7 @@ def d79(spark: SparkSession, sf_dir: str) -> DataFrame:
         (640 + (F.col("doc_id") % 5) * 320).cast("long").alias("width"),
         (480 + (F.col("doc_id") % 3) * 360).cast("long").alias("height"),
     )
-    return plan_image_tiles(assets, tile=512).repartition(1).sortWithinPartitions("asset_id", "tile_x", "tile_y")
+    return plan_image_tiles(assets, tile=512).orderBy("asset_id", "tile_x", "tile_y")
 
 
 # --- D80: corpus concentration audit -----------------------------------------

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators.skew import salted_agg, salted_broadcast_left
-from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.localframe import bounded_sort, local_df
 from etl_cortex_spark.queries import T, query
 
 
@@ -371,9 +371,7 @@ def scale_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_total))
         .filter(F.col("cnt") > F.lit(support) * F.col("__n"))
         .select("key", "cnt")
-        # candidate heavy-hitter slice: local sort
-        .repartition(1)
-        .sortWithinPartitions("key")
+        .transform(bounded_sort, "key", max_rows=int(1 / support))
     )
 
 
@@ -697,9 +695,7 @@ def scale_bucketed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue"),
         )
-        # |priority| rows: local sort == global order, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("o_orderpriority")
+        .transform(bounded_sort, "o_orderpriority", max_rows=5)
     )
 
 
@@ -882,8 +878,7 @@ def scale_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("version", "n_orders", "total_price")
         )
     out = frames[0].unionByName(frames[1]).unionByName(frames[2])
-    # 3 rows: local sort == global order, no range exchange
-    return out.coalesce(1).sortWithinPartitions("version")
+    return bounded_sort(out, "version", max_rows=len(frames))
 
 
 @query(
@@ -946,7 +941,8 @@ def scale_snapshot_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    return frames[0].unionByName(frames[1]).coalesce(1).sortWithinPartitions("version")
+    out = frames[0].unionByName(frames[1])
+    return bounded_sort(out, "version", max_rows=len(frames))
 
 
 @query(
@@ -1121,9 +1117,7 @@ def scale_snapshot_partition_evolution(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        # 3-row output: local sort, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("gen")
+        .transform(bounded_sort, "gen", max_rows=3)
     )
 
 
@@ -1191,9 +1185,7 @@ def scale_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             "version", "n_files", "n_added", "n_removed",
             "n_delete_entries", "has_layout",
         )
-        # 5-row output: local sort, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("version")
+        .transform(bounded_sort, "version", max_rows=5)
     )
 
 
@@ -1334,9 +1326,7 @@ def scale_snapshot_hidden_partitioning(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        # 12-row output: local sort, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("month")
+        .transform(bounded_sort, "month", max_rows=12)
     )
 
 
@@ -1399,9 +1389,7 @@ def scale_snapshot_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        # 3-row output: local sort, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("_commit_version")
+        .transform(bounded_sort, "_commit_version", max_rows=3)
     )
 
 
@@ -1482,7 +1470,8 @@ def scale_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    return frames[0].unionByName(frames[1]).coalesce(1).sortWithinPartitions("version")
+    out = frames[0].unionByName(frames[1])
+    return bounded_sort(out, "version", max_rows=len(frames))
 
 
 @query(
@@ -1565,7 +1554,7 @@ def scale_snapshot_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("version", "n_orders", "total_price")
         )
     out = frames[0].unionByName(frames[1]).unionByName(frames[2])
-    return out.coalesce(1).sortWithinPartitions("version")
+    return bounded_sort(out, "version", max_rows=len(frames))
 
 
 @query(
@@ -1761,7 +1750,8 @@ def scale_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    return frames[0].unionByName(frames[1]).coalesce(1).sortWithinPartitions("version")
+    out = frames[0].unionByName(frames[1])
+    return bounded_sort(out, "version", max_rows=len(frames))
 
 
 @query(
@@ -1897,8 +1887,7 @@ def scale_changes_downstream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.parquet(state_dir_next)
         state_dir = state_dir_next
     out = spark.read.parquet(state_dir)
-    # k-row result (one per status): local sort, no range exchange
-    return out.coalesce(1).sortWithinPartitions("o_orderstatus")
+    return bounded_sort(out, "o_orderstatus", max_rows=3)
 
 
 @query(
@@ -1967,8 +1956,7 @@ def scale_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
                 F.when(F.coalesce(F.col("o_flagged"), F.lit(False)), 1).otherwise(0)
             ).alias("n_flagged_true"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("o_orderstatus")
+        .transform(bounded_sort, "o_orderstatus", max_rows=3)
     )
 
 
@@ -2169,7 +2157,7 @@ def scale_snapshot_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("version", "n_orders", "total_price")
         )
     out = frames[0].unionByName(frames[1]).unionByName(frames[2])
-    return out.coalesce(1).sortWithinPartitions("version")
+    return bounded_sort(out, "version", max_rows=len(frames))
 
 
 @query(
@@ -2257,7 +2245,7 @@ def scale_snapshot_delete_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
-    return out.coalesce(1).sortWithinPartitions("version")
+    return bounded_sort(out, "version", max_rows=len(frames))
 
 
 @query(
@@ -2313,7 +2301,7 @@ def scale_snapshot_bucket_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k in (7, 42, 101)
     ]
     out = reduce(lambda a, b: a.unionByName(b), parts)
-    return out.coalesce(1).sortWithinPartitions("c_custkey")
+    return bounded_sort(out, "c_custkey", max_rows=len(parts))
 
 
 @query(
@@ -2365,8 +2353,7 @@ def scale_snapshot_cdf_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("change_type")
+        .transform(bounded_sort, "change_type", max_rows=4)
     )
 
 
@@ -2686,7 +2673,8 @@ def scale_snapshot_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("tag", "n_orders", "total_price")
         )
-    return frames[0].unionByName(frames[1]).coalesce(1).sortWithinPartitions("tag")
+    out = frames[0].unionByName(frames[1])
+    return bounded_sort(out, "tag", max_rows=len(frames))
 
 
 @query(
@@ -2897,8 +2885,7 @@ def scale_snapshot_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__n").cast("bigint").alias("n_rows"),
             F.round("__sum_x", 2).cast("double").alias("total_value"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("grp")
+        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 
@@ -2980,8 +2967,7 @@ def scale_snapshot_cdf_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__n").cast("bigint").alias("n_rows"),
             F.col("__sum_event_id").cast("bigint").alias("sum_eid"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("grp")
+        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 
@@ -3113,8 +3099,7 @@ def scale_snapshot_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("eid").cast("bigint").alias("sum_eid"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("grp")
+        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 
@@ -3242,8 +3227,7 @@ def scale_snapshot_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("event_id").cast("bigint").alias("sum_eid"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("grp")
+        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 

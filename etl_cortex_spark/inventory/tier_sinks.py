@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.queries import T, query
 from etl_cortex_spark.sinks.files import write_csv, write_parquet
 
@@ -229,13 +230,14 @@ def pyds_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cortex_spark.sources.pyds import register
 
     register(spark)
+    n = 500
     df = (
         spark.read.format("synthetic_docs")
-        .option("n", 500)
+        .option("n", n)
         .option("splits", 8)
         .load()
     )
-    return df.repartition(1).sortWithinPartitions("doc_id")
+    return bounded_sort(df, "doc_id", max_rows=n)
 
 
 @query(

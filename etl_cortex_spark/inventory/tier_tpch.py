@@ -25,6 +25,7 @@ from etl_cortex_spark.operators.layout import (
     conformed_dim,
     fact_buckets,
 )
+from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.queries import T, query
 
 
@@ -286,10 +287,7 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-        # |nation| rows: single-partition local sort == global order,
-        # without the range exchange and its separate sampling job
-        .coalesce(1)
-        .sortWithinPartitions(F.desc("revenue"), "n_name")
+        .transform(bounded_sort, F.desc("revenue"), "n_name", max_rows=25)
     )
 
 
@@ -392,9 +390,7 @@ def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         shipped_late.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        # 5-row output: local sort, no sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("o_orderpriority")
+        .transform(bounded_sort, "o_orderpriority", max_rows=5)
     )
 
 
@@ -1090,10 +1086,7 @@ def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("profit_sum")
         )
-        # nation x year output (~175 rows): local sort, no sampling
-        # re-execution of the 5-way join
-        .repartition(1)
-        .sortWithinPartitions("supp_nation", F.desc("o_year"))
+        .transform(bounded_sort, "supp_nation", F.desc("o_year"), max_rows=25 * 7)
     )
 
 
@@ -1236,9 +1229,14 @@ def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(parts), F.col("p_partkey") == F.col("ps_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct(F.col("ps_suppkey")).alias("supplier_cnt"))
-        # brand/type/size groups: local sort, no sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
+        .transform(
+            bounded_sort,
+            F.desc("supplier_cnt"),
+            "p_brand",
+            "p_type",
+            "p_size",
+            max_rows=25 * 150 * 8,
+        )
     )
 
 
@@ -1322,7 +1320,5 @@ def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .select("s_name", "s_acctbal")
-        # bounded supplier slice: local sort, no sampling re-execution
-        .repartition(1)
-        .sortWithinPartitions("s_name")
+        .orderBy("s_name")
     )

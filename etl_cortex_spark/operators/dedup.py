@@ -95,17 +95,6 @@ def base_hashes(shingle_col) -> F.Column:
     return F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_H31)))
 
 
-def minhash_signature(hash_col, num_hashes: int = 32, seed: int = 42):
-    """Array of ``num_hashes`` MinHash values for an array-of-base-hashes
-    column (see ``base_hashes``). Permutations: (a·h+b) mod p — integer
-    work only, no re-hashing of the shingle strings."""
-    sigs = [
-        F.array_min(F.transform(hash_col, lambda h: F.pmod(a * h + b, F.lit(_P))))
-        for a, b in _perm_params(num_hashes, seed)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",

@@ -408,29 +408,6 @@ def bfs_hops(
     )
 
 
-def bfs_unrolled_sql(
-    edges_sql: str, source: int, *, iters: int = 4
-) -> str:
-    """DuckDB twin of ``bfs_hops`` via a recursive CTE: explore all
-    paths up to the diameter, then keep min(dist) per node. Exact for
-    graphs whose eccentricity from ``source`` is ≤ ``iters``."""
-    return f"""
-    WITH RECURSIVE e AS (
-      SELECT src AS s, dst AS d FROM ({edges_sql})
-      UNION ALL
-      SELECT dst, src FROM ({edges_sql})
-    ),
-    walk(node, dist) AS (
-      SELECT CAST({source} AS BIGINT), 0
-      UNION ALL
-      SELECT e.d, walk.dist + 1
-      FROM walk JOIN e ON walk.node = e.s
-      WHERE walk.dist < {iters}
-    )
-    SELECT node, CAST(min(dist) AS INT) AS hops FROM walk GROUP BY node
-    """
-
-
 def directed_3cycles(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:

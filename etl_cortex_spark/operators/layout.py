@@ -293,11 +293,6 @@ def bucketed_fact(
     base = load_table(spark, sf_dir, table)
     if cols is not None:
         base = base.select(*cols)
-    if os.environ.get("SPARK_GRAFT_NO_BUCKET"):
-        # measurement/ops escape hatch: serve the plain scan (identical
-        # rows) — the paired bucketed-vs-plain A/B in BASELINE.md flips
-        # this within one session so both legs share a JVM and window.
-        return base
     name = bucketed_fact_name(sf_dir, table, key, cols, n_buckets)
     try:
         if not spark.catalog.tableExists(name):
@@ -408,8 +403,6 @@ def bucketed_fact_with_delta(
     base = load_table(spark, sf_dir, table)
     if cols is not None:
         base = base.select(*cols)
-    if os.environ.get("SPARK_GRAFT_NO_BUCKET"):
-        return base.unionByName(delta_of(base))
     # "incr" folded into the sig input keeps this maintained table's
     # namespace disjoint from the append-free `bucketed_fact` layout of
     # the same (table, key, cols) — and the name still matches the
@@ -2530,13 +2523,16 @@ def snapshot_merge_mor(
 def _zorder_rewrite(df, zorder_by: tuple | None, n_out: int):
     """The compaction rewrite plan: Morton-clustered when asked (one
     cheap min/max agg for the normalization bounds, one range shuffle
-    on the interleaved key), plain coalesce otherwise — with the
-    empty/all-NULL-bounds guard (round-16 ADVICE): no curve exists
-    there, so fall through to the plain rewrite."""
+    on the interleaved key), a plain round-robin ``repartition(n_out)``
+    otherwise — with the empty/all-NULL-bounds guard (round-16 ADVICE):
+    no curve exists there, so fall through to the plain rewrite.
+    ``repartition`` rather than ``coalesce``: coalesce can only LOWER
+    the partition count, so a scan with fewer partitions than
+    ``n_out`` would write fewer files than asked for."""
     from pyspark.sql import functions as F
 
     if zorder_by is None:
-        return df.coalesce(n_out)
+        return df.repartition(n_out)
     xc, yc = zorder_by
     b = df.agg(
         F.min(F.col(xc).cast("double")).alias("xlo"),
@@ -2545,9 +2541,9 @@ def _zorder_rewrite(df, zorder_by: tuple | None, n_out: int):
         F.max(F.col(yc).cast("double")).alias("yhi"),
     ).collect()[0]
     if b["xlo"] is None or b["ylo"] is None:
-        # EMPTY set (or all-NULL keys): coalesce(1) still writes one
+        # EMPTY set (or all-NULL keys): the write still leaves a
         # schema-carrying part file, so read paths keep working
-        return df.coalesce(n_out)
+        return df.repartition(n_out)
     key = morton_key(
         F.col(xc),
         F.col(yc),

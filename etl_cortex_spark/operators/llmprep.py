@@ -1641,9 +1641,7 @@ def ccnet_perplexity_buckets(
             F.sum("__m").alias("n_trigrams"),
             F.sum("__s").alias("sum_lp_micro"),
         )
-        # k-row output (langs × buckets): local sort, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("lang", "bucket")
+        .orderBy("lang", "bucket")
     )
 
 
@@ -1761,7 +1759,5 @@ def lang_id_predict(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("__s").alias("sum_score_micro"),
         )
-        # confusion-matrix-sized output: local sort, no range exchange
-        .coalesce(1)
-        .sortWithinPartitions("lang", "pred_lang")
+        .orderBy("lang", "pred_lang")
     )

@@ -27,7 +27,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.localframe import bounded_sort, local_df
 
 
 def as_double(vec: Column | str) -> Column:
@@ -53,8 +53,8 @@ def cosine(a: Column, b: Column) -> Column:
 # vectors, hyperplanes, centroids) on the theory that HOF lambdas are
 # interpreted per row while unrolled arithmetic rides whole-stage
 # codegen, backed by one slope-window measurement (d03 sf1 0.24 s ->
-# 0.15 s). The round-10 interleaved three-way A/B (tools/ab_round10.py,
-# fold vs guarded-unroll vs unguarded-unroll alternating in ONE JVM)
+# 0.15 s). The round-10 interleaved three-way A/B (fold vs
+# guarded-unroll vs unguarded-unroll alternating in ONE JVM)
 # REFUTED it: the zip_with/aggregate fold wins at BOTH scale factors —
 # sf0.1: fold 0.066 s, unguarded unroll 0.132 s, size-guarded unroll
 # 0.184 s; sf1: fold 0.082 s, unroll 0.121 s, guarded 0.717 s. The
@@ -67,9 +67,7 @@ def cosine(a: Column, b: Column) -> Column:
 # So dot_lit/norm_sq_expr/cosine_lit below are FOLDS over a literal
 # array: same left-to-right ((0+t1)+t2)+... order, bit-identical
 # values, natural NULL-degrade on dim mismatch (zip_with pads the
-# short side with NULL -> NULL sum), no guard needed. The historical
-# unroll stays behind ``SPARK_GRAFT_UNROLL=1`` so the A/B is
-# re-runnable; it is never the default.
+# short side with NULL -> NULL sum), no guard needed.
 
 
 def _lit_array(q: list[float]) -> Column:
@@ -100,43 +98,19 @@ def _lit_array(q: list[float]) -> Column:
     return F.expr("array(" + ",".join(r(x) for x in q) + ")")
 
 
-def _unrolled_dot(v: Column, q: list[float]) -> Column:
-    """The round-9 unroll, kept ONLY for the SPARK_GRAFT_UNROLL A/B
-    leg (see the block comment above — measured SLOWER than the fold
-    at every SF). Size-guarded so ragged vectors NULL-degrade instead
-    of truncating (longer) or throwing ANSI INVALID_ARRAY_INDEX
-    (shorter); CaseWhen evaluates the branch lazily."""
-    out: Column = F.lit(0.0)
-    for i, x in enumerate(q):
-        out = out + F.element_at(v, i + 1) * F.lit(float(x))
-    return F.when(F.size(v) == F.lit(len(q)), out)
-
-
 def dot_lit(v: Column, q: list[float]) -> Column:
     """dot(v, literal q): the zip_with/aggregate fold over a literal
     array — measured fastest (round-10 A/B, block comment above), and
     NULL on dim mismatch by construction (zip_with pads the short
     side with NULL)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_UNROLL"):  # A/B leg only
-        return _unrolled_dot(v, q)
     return dot(v, _lit_array(q))
 
 
 def norm_sq_expr(v: Column, dim: int) -> Column:
     """Σ v[i]^2 as the aggregate fold (order == l2norm's). ``dim`` is
-    kept for signature stability and the unroll leg; the fold itself
-    runs over the vector's actual length — callers pair it with a
-    ``dot`` whose NULL-degrade already voids ragged rows."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_UNROLL"):  # A/B leg only
-        out: Column = F.lit(0.0)
-        for i in range(dim):
-            e = F.element_at(v, i + 1)
-            out = out + e * e
-        return F.when(F.size(v) == F.lit(dim), out)
+    kept for signature stability; the fold runs over the vector's
+    actual length — callers pair it with a ``dot`` whose NULL-degrade
+    already voids ragged rows."""
     return F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x)
 
 
@@ -144,24 +118,7 @@ def cosine_lit(v: Column, q: list[float]) -> Column:
     """cosine(v, literal q) — the HOF fold over a literal array (the
     measured-fastest form at every SF; round-10 A/B). Left-to-right
     IEEE folds on both engines → bit-identical round(6) values; dim
-    mismatch → NULL dot → NULL cosine (the zip_with degrade).
-
-    The ``SPARK_GRAFT_UNROLL`` gate composes the historical unroll leg
-    (round-10 ADVICE: without it, d03_cosine_topk — the exact query
-    tools/ab_round10.py measures — ran the fold on BOTH legs and a
-    re-run would report a wash instead of reproducing the recorded
-    A/B). Values are bit-identical to the fold: ||q|| is the same
-    left-to-right IEEE sum evaluated driver-side (Python floats ARE
-    doubles), and the unrolled Σv[i]² keeps the fold's order."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_UNROLL"):  # A/B leg only
-        qn_sq = 0.0
-        for x in q:
-            qn_sq += float(x) * float(x)
-        return _unrolled_dot(v, q) / (
-            F.sqrt(norm_sq_expr(v, len(q))) * F.lit(qn_sq**0.5)
-        )
+    mismatch → NULL dot → NULL cosine (the zip_with degrade)."""
     return cosine(v, _lit_array(q))
 
 
@@ -954,6 +911,5 @@ def matryoshka_recall_audit(
             "hits",
             (F.col("hits").cast("double") / F.lit(denom)).alias("recall_at_k"),
         )
-        .coalesce(1)
-        .sortWithinPartitions("m")
+        .transform(bounded_sort, "m", max_rows=len(dims))
     )

@@ -1,7 +1,7 @@
 """Plan inspection helpers (SURVEY C40 + the test_plans.py contract).
 
 Small, dependency-free accessors over ``queryExecution`` so scale
-properties (pushdown, pruning, exchange counts, codegen) can be
+properties (exchange counts, operator counts) can be
 asserted in tests and inspected interactively:
 
     from etl_cortex_spark import plans
@@ -44,29 +44,3 @@ def node_counts(df: DataFrame) -> dict[str, int]:
 def exchange_count(df: DataFrame) -> int:
     return node_counts(df).get("Exchange", 0)
 
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters entries of every scan in the plan."""
-    out = []
-    for line in formatted(df).splitlines():
-        line = line.strip()
-        if line.startswith("PushedFilters:"):
-            inner = line.split(":", 1)[1].strip().strip("[]")
-            out.extend(p.strip() for p in inner.split(",") if p.strip())
-    return out
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    """ReadSchema strings of every scan — what actually gets read."""
-    return [
-        line.strip().split(":", 1)[1].strip()
-        for line in formatted(df).splitlines()
-        if line.strip().startswith("ReadSchema:")
-    ]
-
-
-def uses_python_eval(df: DataFrame) -> bool:
-    """True when any Python-evaluation operator is in the plan — the
-    thing hot paths must avoid."""
-    body = formatted(df)
-    return "BatchEvalPython" in body or "ArrowEvalPython" in body

@@ -22,6 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.sources.tables import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -103,11 +104,6 @@ def flagship_events_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct("value", "prop_k"), F.struct("ts", "event_id")
         ).alias("__m")
     )
-    # Final ORDER BY: the output has one row per event type (a bounded
-    # domain), so a single-partition local sort gives the same total
-    # order as a global orderBy without the range exchange and its
-    # separate sampling job. At any scale the post-agg row count is
-    # |event_type| — coalesce(1) here is safe by construction.
     return (
         gold.groupBy("event_type")
         .agg(
@@ -115,8 +111,7 @@ def flagship_events_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("__m.value"), 2).alias("total_value"),
             F.round(F.avg("__m.prop_k"), 2).alias("avg_k"),
         )
-        .coalesce(1)
-        .sortWithinPartitions(F.desc("qtd"), "event_type")
+        .transform(bounded_sort, F.desc("qtd"), "event_type", max_rows=5)
     )
 
 

@@ -50,12 +50,3 @@ def write_csv(
     representable; callers project/serialize them first (to_json)."""
     _prep(df, coalesce_to).write.mode(mode).option("header", header).csv(path)
 
-
-def write_json(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    coalesce_to: int | None = None,
-) -> None:
-    """JSON-lines sink (round-trips the C3 JSON scan)."""
-    _prep(df, coalesce_to).write.mode(mode).json(path)

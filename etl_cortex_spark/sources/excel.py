@@ -33,6 +33,8 @@ from xml.etree import ElementTree as ET
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from etl_cortex_spark.operators.cleaning import norm_col
 from etl_cortex_spark.operators.localframe import local_df
@@ -234,10 +236,39 @@ def parse_cortex_xlsx(data: bytes) -> tuple[pd.DataFrame, int]:
     return rows_to_pandas(rows, hdr), hdr
 
 
+def _align_types(dfs: list[DataFrame]) -> list[DataFrame]:
+    """Cast a column to string in every file when its type differs
+    across files (a date-typed ``Last Seen`` in one upload, the text
+    ``never`` in another). ``unionByName`` would otherwise cast the
+    strings to the other file's type and fail the job; the reference's
+    ``pd.concat`` keeps them as objects and silver's coercion turns
+    the unparseable ones into NULL. Numeric-only differences are left
+    to the union's widening, as ``pd.concat`` promotes int to float.
+    When every file agrees, the frames come back untouched."""
+    types: dict[str, set] = {}
+    for df in dfs:
+        for f in df.schema.fields:
+            types.setdefault(f.name, set()).add(f.dataType)
+    clash = {
+        c
+        for c, ts in types.items()
+        if len(ts) > 1 and not all(isinstance(t, NumericType) for t in ts)
+    }
+    if not clash:
+        return dfs
+    return [
+        df.withColumns(
+            {c: F.col(f"`{c}`").cast("string") for c in df.columns if c in clash}
+        )
+        for df in dfs
+    ]
+
+
 def read_excel(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
     """Driver-side xlsx ingest for small file counts (the reference's
     regime: a handful of uploads). Full type fidelity per file, then
-    ``unionByName(allowMissingColumns=True)`` (A11 semantics)."""
+    ``unionByName(allowMissingColumns=True)`` (A11 semantics) after
+    ``_align_types`` settles columns whose type differs by file."""
     from etl_cortex_spark.operators.gold import union_all
 
     dfs = []
@@ -248,7 +279,7 @@ def read_excel(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
             dfs.append(spark.createDataFrame(pdf))
     if not dfs:
         return local_df(spark, [], "unused string").limit(0).drop("unused")
-    return union_all(dfs)
+    return union_all(_align_types(dfs))
 
 
 def read_excel_distributed(

@@ -308,6 +308,38 @@ def test_distributed_ingest_survives_corrupt_file(spark, xlsx_files, tmp_path):
     assert len(good) == 5 and good["endpoint_name"].notna().all()
 
 
+def test_read_excel_mixed_types_coerce_to_null(spark, xlsx_files, tmp_path):
+    """One file types `Last Seen` as a date, another holds the text
+    `never`: the pipeline runs and the text becomes NULL, as the
+    reference's pd.concat + to_datetime(errors="coerce") gives NaT. An
+    int-vs-float column stays numeric, as pd.concat promotes it. Files
+    whose types agree reach the union untouched."""
+    from etl_cortex_spark.sources.excel import _align_types
+
+    cols = ["Endpoint Name", "Endpoint Status", "Last Seen", "Open Ports"]
+    rows = {
+        "dated": ["host-a", "Connected", dt.datetime(2024, 1, 10, 12, 0, 0), 3],
+        "never": ["host-b", "Lost", "never", 2.5],
+    }
+    paths = []
+    for name, row in rows.items():
+        p = tmp_path / f"{name}.xlsx"
+        p.write_bytes(_write_headerless_xlsx(pd.DataFrame([cols, row])))
+        paths.append(str(p))
+    base = run_pipeline(spark, paths)["Base_Limpa"].toPandas()
+    seen = base.set_index("endpoint_name")["last_seen"]
+    assert seen["host-a"] == pd.Timestamp(2024, 1, 10, 12, 0, 0)
+    assert pd.isna(seen["host-b"])
+    ports = base.set_index("endpoint_name")["open_ports"]
+    assert ports["host-a"] == 3.0 and ports["host-b"] == 2.5
+
+    same = [
+        spark.createDataFrame(parse_cortex_xlsx(open(p, "rb").read())[0])
+        for p in xlsx_files
+    ]
+    assert _align_types(same) is same
+
+
 # ---------------------------------------------------------------------------
 # file sinks (B9/B10)
 # ---------------------------------------------------------------------------

@@ -74,11 +74,13 @@ def _n_shuffle_exchanges(plan: str) -> int:
         # bucketed lineitem feeds the join AND the (l_orderkey,
         # o_orderdate) aggregate exchange-free; top-10 is TakeOrdered.
         ("tpch_q3_shipping_priority", 1),
-        # q5: the co probe build + the |nation|-row final agg.
-        ("tpch_q5_local_supplier_volume", 2),
-        # c10: ONLY the |segment|-row final agg — both sides stream
-        # from their custkey buckets unshuffled (round 9).
-        ("c10_join_inner_agg", 1),
+        # q5: the co probe build + the |nation|-row final agg + the
+        # bounded sort's single-partition exchange of those rows.
+        ("tpch_q5_local_supplier_volume", 3),
+        # c10: ONLY the |segment|-row final agg and its bounded sort —
+        # both sides stream from their custkey buckets unshuffled
+        # (round 9).
+        ("c10_join_inner_agg", 2),
     ],
 )
 def test_bucketed_fact_queries_never_shuffle_the_fact(spark, name, max_exchanges):
@@ -663,6 +665,8 @@ def _registry_plan(spark, name: str, kind: str = "optimized") -> str:
         _REGISTRY_PLANS[name] = {
             "optimized": qe.optimizedPlan().toString(),
             "physical": qe.sparkPlan().toString(),
+            # after EnsureRequirements: the exchanges a global sort adds
+            "executed": qe.executedPlan().toString(),
         }
     return _REGISTRY_PLANS[name][kind]
 
@@ -774,11 +778,12 @@ def test_bucketed_incremental_join_is_exchange_free_after_append(spark):
     reports its bucketing, so the orderkey merge join stays a
     zero-data-sized-Exchange plan — the incremental write bought a
     second file per bucket, not a per-query re-shuffle. The full query
-    keeps exactly one Exchange (the |priority|-row final agg)."""
+    keeps two Exchanges: the |priority|-row final agg and the bounded
+    sort's single-partition exchange of those rows."""
     plan = plan_of(QUERIES["scale_bucketed_incremental"](spark, SF))
     assert "SortMergeJoin" in plan
     assert plan.count("Bucketed: true") >= 2, plan  # both sides bucketed
-    assert _n_shuffle_exchanges(plan) <= 1, plan
+    assert _n_shuffle_exchanges(plan) <= 2, plan
 
 
 def test_bucketed_incremental_append_is_delta_sized(spark):
@@ -908,3 +913,62 @@ def test_postings_index_partition_pruning(spark, tmp_path):
         .limit(10)
     )
     assert rows == [tuple(r) for r in direct.collect()]
+
+
+def test_bounded_sort_is_single_partition_up_to_the_bound(spark):
+    """`bounded_sort` at exactly LOCAL_SORT_MAX_ROWS plans one
+    single-partition exchange and a local sort — no range exchange,
+    so no sampling job — and one row more is refused at plan time."""
+    from etl_cortex_spark.operators.localframe import (
+        LOCAL_SORT_MAX_ROWS,
+        bounded_sort,
+    )
+
+    df = spark.range(100).withColumn("k", F.col("id") % 7)
+    out = bounded_sort(df, "k", "id", max_rows=LOCAL_SORT_MAX_ROWS)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange SinglePartition" in plan, plan
+    assert "rangepartitioning" not in plan, plan
+    with pytest.raises(ValueError, match="LOCAL_SORT_MAX_ROWS"):
+        bounded_sort(df, "k", max_rows=LOCAL_SORT_MAX_ROWS + 1)
+
+
+#: entries whose output grows with the corpus (one row per document,
+#: chunk or vector): they must keep the distributed range sort
+_CORPUS_SIZED_SORTS = (
+    "d14_gopher_quality_flags",
+    "d16_embedding_quantize_int8",
+    "d18_chunk_overlap",
+    "d53_markup_strip",
+    "d54_url_normalize",
+    "d106_encode_to_ids",
+    "d109_encoding_audit",
+    "d05_wav_decode_features",
+)
+
+
+@pytest.mark.parametrize("name", _CORPUS_SIZED_SORTS)
+def test_corpus_sized_outputs_keep_range_sort(spark, name):
+    plan = _registry_plan(spark, name, "executed")
+    assert "Exchange rangepartitioning" in plan, plan
+    assert "SinglePartition" not in plan, plan
+
+
+def test_no_inline_single_partition_sort_outside_bounded_sort():
+    """Source guard: the only `repartition(1)`/`coalesce(1)` followed by
+    `sortWithinPartitions` in the library is the one inside
+    `localframe.bounded_sort`, where the output bound is checked."""
+    import pathlib
+    import re
+
+    pat = re.compile(
+        r"\.(?:repartition|coalesce)\(\s*1\s*\)(?:\s|#[^\n]*)*\.sortWithinPartitions"
+    )
+    root = pathlib.Path(__file__).resolve().parents[1] / "etl_cortex_spark"
+    hits = {
+        str(p.relative_to(root)): len(pat.findall(p.read_text()))
+        for p in root.rglob("*.py")
+    }
+    hits = {k: v for k, v in hits.items() if v}
+    assert hits == {"operators/localframe.py": 1}, hits
+
