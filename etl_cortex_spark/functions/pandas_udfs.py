@@ -2,63 +2,12 @@
 
 Policy: builtin column expressions first (every hot-path operator in
 this engine is one); when Python is genuinely needed, Arrow-batched
-pandas UDFs — never row-at-a-time ``F.udf``. These two are the
-reference patterns, each with a builtin-expression twin the tests (and
-one oracle query) compare against, so the escape hatch is held to the
-same correctness bar as the builtins.
+pandas UDFs or ``mapInPandas`` — never row-at-a-time ``F.udf``. The one
+Python-defined function a registry entry uses is the row-expanding
+UDTF below (d33), held to its pure-SQL twin by an oracle.
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
-
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType
-
-# NB: explicit DataType objects, not DDL strings — string return types
-# are parsed at decoration time and would demand a live SparkSession at
-# import.
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def normalize_vec(vectors: pd.Series) -> pd.Series:
-    """SCALAR pandas UDF: L2-normalize an array<double> column.
-    Arrow hands each batch as a Series of numpy arrays; the kernel is
-    vectorized per batch. Builtin twin: transform(v, x -> x / sqrt(agg))."""
-    def _norm(v):
-        if v is None:
-            return None
-        a = np.asarray(v, dtype="float64")
-        n = float(np.sqrt((a * a).sum()))
-        return (a / n).tolist() if n > 0 else a.tolist()
-
-    return vectors.map(_norm)
-
-
-@pandas_udf(DoubleType())
-def geometric_mean(values: pd.Series) -> float | None:
-    """GROUPED_AGG pandas UDF: geometric mean of positive values.
-    Builtin twin: exp(avg(ln(x))) — which is also the DuckDB oracle.
-    Groups with no positive values return NULL (matching the twin,
-    where avg over all-NULL ln(x) is NULL), never NaN."""
-    v = values.dropna()
-    v = v[v > 0]
-    if len(v) == 0:
-        return None
-    return float(np.exp(np.log(v.astype("float64")).mean()))
-
-
-def normalize_vec_builtin(col):
-    """The builtin-expression twin of ``normalize_vec`` (stays in
-    codegen; preferred in hot paths — the UDF exists to document the
-    escape-hatch shape)."""
-    from etl_cortex_spark.operators.similarity import as_double, l2norm
-
-    v = as_double(col)
-    n = l2norm(v)
-    return F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v)
 
 
 def sentence_udtf():
@@ -95,38 +44,3 @@ def sentence_udtf():
                 yield idx, tail, len(tail)
 
     return SentenceSplit
-
-
-def token_stats_arrow(df, text_col: str = "text"):
-    """``mapInArrow`` — the zero-copy tier of the escape hatch: the
-    kernel receives raw ``pyarrow.RecordBatch``es (no pandas
-    materialization, no per-column Series boxing), the right shape
-    when the Python work is itself Arrow-native (tokenizers,
-    Arrow-backed model feature extractors) and the pandas layer would
-    only add a copy. Emits (doc_id, n_tokens, n_chars) per row; the
-    builtin twin (size(split())/length(), what d04 runs in
-    production) is asserted equal in the tests, so this surface is
-    held to the same swap-in/swap-out bar as the pandas UDFs."""
-    import pyarrow as pa_  # local import: keep module import light
-
-    def kernel(batches):
-        for batch in batches:
-            texts = batch.column("__text")
-            n_tok = pa_.array(
-                [
-                    0 if t is None else len(t.split())
-                    for t in texts.to_pylist()
-                ],
-                pa_.int64(),
-            )
-            n_chars = pa_.array(
-                [0 if t is None else len(t) for t in texts.to_pylist()],
-                pa_.int64(),
-            )
-            yield pa_.RecordBatch.from_arrays(
-                [batch.column("doc_id"), n_tok, n_chars],
-                ["doc_id", "n_tokens", "n_chars"],
-            )
-
-    narrowed = df.select("doc_id", F.col(text_col).alias("__text"))
-    return narrowed.mapInArrow(kernel, "doc_id long, n_tokens long, n_chars long")

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators import cleaning as C
-from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.operators.quantiles import exact_percentile_disc
 from etl_cortex_spark.queries import T, query
 
@@ -34,7 +33,6 @@ def b01(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         df.groupBy(F.col("n_regionkey").cast("long").alias("n_regionkey"))
         .agg(F.count(F.lit(1)).alias("n_nations"))
-        .orderBy(F.asc_nulls_last("n_regionkey"))
     )
 
 
@@ -92,7 +90,6 @@ def b08(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderdate").between("1996-01-01 00:00:00", "1997-12-31 23:59:59"))
         .groupBy("o_orderstatus")
         .agg(F.count(F.lit(1)).alias("qtd"))
-        .orderBy(F.desc("qtd"), "o_orderstatus")
     )
 
 
@@ -109,7 +106,7 @@ def b11(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         """
         SELECT c_mktsegment, count(*) AS n_customers, round(avg(c_acctbal), 2) AS avg_bal
-        FROM gold GROUP BY c_mktsegment ORDER BY c_mktsegment
+        FROM gold GROUP BY c_mktsegment
         """
     )
 
@@ -170,7 +167,6 @@ def c03(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         df.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total"))
-        .orderBy("event_type")
     )
 
 
@@ -256,7 +252,7 @@ def b15(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, key_cols=["user_id"], attr_cols=["event_type"],
         ts_col="ts", tiebreak_cols=["event_id"],
     )
-    return out.orderBy("user_id", "valid_from")
+    return out
 
 
 @query(
@@ -291,8 +287,7 @@ def b16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B16 / D7 batch twin: gaps-and-islands sessionization (30-minute
     inactivity gap) — the oracle-checkable batch equivalent of the
     rows-only streaming session_window query. Both windows and the
-    final aggregate share the user_id hash partitioning: one shuffle
-    plus the output sort."""
+    final aggregate share the user_id hash partitioning: one shuffle."""
     ev = T(spark, sf_dir, "events").filter(F.col("user_id") % 10 == 0)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # Compare at full timestamp precision (the oracle compares the raw
@@ -317,7 +312,6 @@ def b16(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -370,7 +364,7 @@ def b17(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("o_totalprice", 2).alias("o_totalprice"),
         "updated",
         "inserted",
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -475,7 +469,6 @@ def b20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         zscore_anomalies(daily)
         .withColumn("day", F.col("day").cast("timestamp"))
-        .transform(bounded_sort, "event_type", "day", max_rows=5 * 30)
     )
 
 
@@ -512,7 +505,6 @@ def b21(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.filter(F.col("next_type").isNotNull())
         .groupBy("event_type", "next_type")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(bounded_sort, "event_type", "next_type", max_rows=5 * 5)
     )
 
 
@@ -576,7 +568,6 @@ def b13c(spark: SparkSession, sf_dir: str) -> DataFrame:
             "val",
             "val_interp",
         )
-        .transform(bounded_sort, "event_type", "day", max_rows=5 * 30)
     )
 
 
@@ -639,7 +630,6 @@ def b22(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.round("total", 2) == F.col("ftotal"))
             ).alias("matches_full"),
         )
-        .transform(bounded_sort, "o_orderstatus", max_rows=3)
     )
 
 
@@ -693,7 +683,7 @@ def b23(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 7 == 0, F.round(F.col("o_totalprice") + 500.0, 2)
         ).otherwise(F.col("o_totalprice")),
     )
-    return cdc_diff(old, new, ["o_orderkey"]).orderBy("o_orderkey")
+    return cdc_diff(old, new, ["o_orderkey"])
 
 
 @query(
@@ -761,7 +751,6 @@ def b25(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("o_totalprice"), 2).alias("total"),
         )
-        .orderBy("price_bin", "cust_bin")
     )
 
 
@@ -839,7 +828,7 @@ def b26(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when((F.col("r_quartile") >= 3) & (F.col("f_quartile") >= 3), "at_risk")
         .otherwise("regular")
     )
-    return scored.withColumn("segment", seg).orderBy("user_id")
+    return scored.withColumn("segment", seg)
 
 
 @query(
@@ -885,7 +874,6 @@ def b27(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("report_day")
         .agg(F.countDistinct("user_id").alias("wau"))
         .select(F.col("report_day").cast("timestamp").alias("report_day"), "wau")
-        .transform(bounded_sort, "report_day", max_rows=30)
     )
 
 
@@ -924,7 +912,7 @@ def b28(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cortex_spark.operators.timeseries import twap
 
     ev = T(spark, sf_dir, "events").select("user_id", "event_id", "value", "ts")
-    return twap(ev, "user_id", "ts", "value", "event_id").orderBy("user_id")
+    return twap(ev, "user_id", "ts", "value", "event_id")
 
 
 # --- B29: equi-depth histogram ------------------------------------------------
@@ -986,7 +974,6 @@ def b29(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("l_extendedprice").alias("lo"),
             F.max("l_extendedprice").alias("hi"),
         )
-        .transform(bounded_sort, "bucket", max_rows=4)
     )
 
 
@@ -1014,7 +1001,6 @@ mad AS (
 SELECT v.event_type, CAST(v.day AS TIMESTAMP) AS day, v.n, v.med, v.ad, t.mad
 FROM dev v JOIN mad t ON v.event_type = t.event_type
 WHERE v.ad > 2.0 * 1.4826 * t.mad
-ORDER BY v.event_type, day
 """
 
 
@@ -1148,4 +1134,4 @@ def b32(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["user_id"], fact_ts="ts",
     ).select(
         "user_id", "event_id", "ts", "state_at_event", "valid_from"
-    ).orderBy("user_id", "event_id")
+    )

@@ -81,7 +81,7 @@ def c04(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c04_mem"
     )
     return spark.sql(
-        "SELECT tier, count(*) AS n FROM c04_mem GROUP BY tier ORDER BY n DESC, tier"
+        "SELECT tier, count(*) AS n FROM c04_mem GROUP BY tier"
     )
 
 

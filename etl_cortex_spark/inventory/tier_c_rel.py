@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators.asof import asof_join
-from etl_cortex_spark.operators.localframe import bounded_sort, local_df
+from etl_cortex_spark.operators.localframe import local_df
 from etl_cortex_spark.operators.quantiles import exact_percentile_disc
 from etl_cortex_spark.queries import T, query
 
@@ -76,7 +76,6 @@ def c10(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
         )
-        .transform(bounded_sort, "c_mktsegment", max_rows=5)
     )
 
 
@@ -138,7 +137,6 @@ def c12(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_with_orders"))
-        .orderBy("c_mktsegment")
     )
 
 
@@ -199,7 +197,6 @@ def c14(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("label").alias("size_class"))
         .agg(F.count(F.lit(1)).alias("n_parts"))
-        .orderBy("size_class")
     )
 
 
@@ -224,7 +221,6 @@ def c15(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("r_name")
     )
 
 
@@ -297,7 +293,6 @@ def c17(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .transform(bounded_sort, "l_returnflag", "l_linestatus", max_rows=3 * 2)
     )
 
 
@@ -318,7 +313,6 @@ def c18(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_custkey").alias("n_customers"),
             F.countDistinct("o_orderpriority").alias("n_priorities"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -375,7 +369,6 @@ def c20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .filter(F.col("n_orders") >= 15)
-        .orderBy(F.desc("n_orders"), "o_custkey")
     )
 
 
@@ -445,7 +438,6 @@ def c22(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("big_qty"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -474,7 +466,6 @@ def c23(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.median("l_quantity"), 2).alias("med_qty"),
             F.round(F.percentile("l_extendedprice", 0.9), 2).alias("p90_price"),
         )
-        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -497,7 +488,6 @@ def c24(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "priorities"
             )
         )
-        .transform(bounded_sort, "o_orderstatus", max_rows=3)
     )
 
 
@@ -523,7 +513,7 @@ def c25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "o_orderpriority",
         *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in ("F", "O", "P")],
-    ).orderBy("o_orderpriority")
+    )
 
 
 @query(
@@ -882,7 +872,6 @@ def c39(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(F.broadcast(lookup), orders.o_orderpriority == lookup.prio)
         .groupBy("tier")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .orderBy("tier")
     )
 
 
@@ -945,7 +934,7 @@ def c49(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"stack({len(_PROFILE_COLS)}, {stack_args}) AS "
             "(col_name, n_rows, n_nulls, n_distinct, min_val, max_val)"
         )
-    ).orderBy("col_name")
+    )
 
 
 # --- C50: LATERAL correlated subquery -----------------------------------------
@@ -979,7 +968,6 @@ def c50(spark: SparkSession, sf_dir: str) -> DataFrame:
           WHERE c_nationkey = n_nationkey
           ORDER BY c_acctbal DESC, c_name LIMIT 3
         )
-        ORDER BY n_name, c_acctbal DESC, c_name
         """
     )
 
@@ -1106,7 +1094,7 @@ def c53(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("day").cast("timestamp").alias("day"),
         "daily_rev",
         F.round(F.sum("daily_rev").over(w), 4).alias("trailing7"),
-    ).orderBy("l_returnflag", "day")
+    )
 
 
 _CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
@@ -1141,7 +1129,6 @@ def c54(spark: SparkSession, sf_dir: str) -> DataFrame:
     stack = ", ".join(f"'{a}', '{b}', __c_{a}__{b}" for a, b in names)
     return (
         one.selectExpr(f"stack({len(names)}, {stack}) AS (col_a, col_b, corr)")
-        .transform(bounded_sort, "col_a", "col_b", max_rows=len(names))
     )
 
 
@@ -1184,7 +1171,6 @@ def c55(spark: SparkSession, sf_dir: str) -> DataFrame:
             n.alias("n_days"),
             F.round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6).alias("slope"),
         )
-        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -1219,7 +1205,6 @@ def c56(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         i.select(F.lit("intersect_all").alias("op"), "s", "n")
         .unionByName(e.select(F.lit("except_all").alias("op"), "s", "n"))
-        .transform(bounded_sort, "op", "s", max_rows=2 * 3)
     )
 
 
@@ -1257,7 +1242,7 @@ def c58(spark: SparkSession, sf_dir: str) -> DataFrame:
             "with_tax"
         ),
         F.col("l_returnflag").try_cast("double").alias("flag_as_num"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @query(
@@ -1338,7 +1323,6 @@ def c60(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM c60_orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority))
-        ORDER BY gid, o_orderstatus NULLS LAST, o_orderpriority NULLS LAST
         """
     )
 
@@ -1366,7 +1350,7 @@ def c61(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/quantiles.exact_percentile_disc`, same rank definition
     smallest v with cum/n >= p, bit-equal data points pinned in
     tests/test_quantiles.py), one call per value column joined on the
-    3-row group frame; trailing sort is local (no range sampling)."""
+    3-row group frame."""
     li = T(spark, sf_dir, "lineitem")
     qty = exact_percentile_disc(
         li.select("l_returnflag", "l_quantity"),
@@ -1387,7 +1371,6 @@ def c61(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_returnflag", "median_qty_disc", "p25_price_disc", "p75_price_disc"
         )
-        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -1506,7 +1489,6 @@ def c64(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "p75_price"
             ),
         )
-        .transform(bounded_sort, "l_returnflag", max_rows=3)
     )
 
 
@@ -1520,7 +1502,7 @@ _C65_SQL_BODY = """
       WHERE d.doc_id BETWEEN 2 AND 63
     )
     SELECT node, depth, root_child
-    FROM walk ORDER BY node
+    FROM walk
 """
 
 
@@ -1596,7 +1578,7 @@ def c66(spark: SparkSession, sf_dir: str) -> DataFrame:
             ld="lead(v) IGNORE NULLS",
             events="c66_events",
         )
-        + ") ORDER BY event_id"
+        + ")"
     )
 
 
@@ -1675,7 +1657,6 @@ def c68(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum(left.k.isNull().cast("bigint")).alias("null_key_pairs"),
         )
-        .orderBy("key_shown")
     )
 
 
@@ -1715,7 +1696,7 @@ def c69(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT sum().over(Window.partitionBy()), which would move the whole
     # filtered scan into a single partition (the search.py:73 pattern).
     total = out.agg(F.sum("k_long").alias("k_total"))
-    return out.crossJoin(F.broadcast(total)).orderBy("event_id")
+    return out.crossJoin(F.broadcast(total))
 
 
 _C70_SQL = """
@@ -1723,7 +1704,7 @@ _C70_SQL = """
            l_extendedprice * (1 - l_discount) AS disc_price,
            disc_price * (1 + l_tax) AS charge,
            charge - disc_price AS tax_paid
-    FROM {li} WHERE l_orderkey <= 200 ORDER BY l_orderkey, disc_price
+    FROM {li} WHERE l_orderkey <= 200
 """
 
 
@@ -1857,7 +1838,7 @@ def c73(spark: SparkSession, sf_dir: str) -> DataFrame:
                   round(sum(o_totalprice), 2) AS total
            FROM c73_orders
            WHERE o_orderdate >= ? AND o_totalprice > ?
-           GROUP BY o_orderpriority ORDER BY o_orderpriority'
+           GROUP BY o_orderpriority'
         USING c73_cutoff, c73_floor
         """
     )
@@ -1889,7 +1870,7 @@ def c74(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(l_quantity) AS BIGINT) AS qty
         FROM c74_lineitem
         WHERE l_discount BETWEEN :lo AND :hi AND l_quantity < :qty
-        GROUP BY l_returnflag ORDER BY l_returnflag
+        GROUP BY l_returnflag
         """,
         args={"lo": 0.05, "hi": 0.07, "qty": 24},
     )
@@ -1924,7 +1905,7 @@ def c75(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS n_status
           FROM c75_orders
           GROUP BY o_orderpriority COLLATE UTF8_LCASE
-        ) ORDER BY prio_ci
+        )
         """
     )
 
@@ -1959,7 +1940,6 @@ def c76(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         parsed.select("p.o_orderkey", "p.o_totalprice", "p.o_orderpriority")
-        .orderBy("o_orderkey")
     )
 
 
@@ -1992,7 +1972,7 @@ def c77(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every kept orderkey is positive, so MAX + key always overflows
         F.expr("try_add(9223372036854775807, l_orderkey)").alias("overflowed"),
         F.expr("try_element_at(split(l_returnflag, ' '), 99)").alias("elem99"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @query(
@@ -2031,4 +2011,4 @@ def c78(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         (F.sum("event_id").over(w) - F.col("event_id")).alias("peer_sum"),
         (F.count(F.lit(1)).over(w) - 1).alias("peer_cnt"),
-    ).orderBy("user_id", "event_id")
+    )

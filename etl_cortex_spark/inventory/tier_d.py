@@ -18,7 +18,7 @@ from etl_cortex_spark.operators import dedup as DD
 from etl_cortex_spark.operators import multimodal as MM
 from etl_cortex_spark.operators import similarity as SIM
 from etl_cortex_spark.operators import textops as TX
-from etl_cortex_spark.operators.localframe import bounded_sort, local_df
+from etl_cortex_spark.operators.localframe import local_df
 from etl_cortex_spark.queries import T, query
 
 # shared oracle SQL fragments (DuckDB): whitespace words + k-shingles,
@@ -81,7 +81,7 @@ def d02(spark: SparkSession, sf_dir: str) -> DataFrame:
     up to recall; the pytest suite checks recall against the exact
     quadratic baseline."""
     base = _mutated_corpus(spark, sf_dir)
-    return DD.minhash_lsh_pairs(base, threshold=0.5).orderBy("id_a", "id_b")
+    return DD.minhash_lsh_pairs(base, threshold=0.5)
 
 
 @query(
@@ -98,8 +98,8 @@ def d02(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM d a, d b
       WHERE a.doc_id < b.doc_id
-        AND round(len(list_intersect(a.sh, b.sh)) /
-              greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1), 6)
+        AND len(list_intersect(a.sh, b.sh)) /
+              greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1)
             >= 0.8
     )
     SELECT CAST(count(*) AS BIGINT) AS n_exact_high, true AS recall_ok FROM ex
@@ -181,8 +181,8 @@ def d02b(spark: SparkSession, sf_dir: str) -> DataFrame:
            a.n_copies AS n_copies_a, b.n_copies AS n_copies_b
     FROM d a, d b
     WHERE a.doc_id < b.doc_id
-      AND round(len(list_intersect(a.sh, b.sh)) /
-                greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1), 6)
+      AND len(list_intersect(a.sh, b.sh)) /
+                greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1)
           >= 0.5
     ORDER BY id_a, id_b
     """,
@@ -210,7 +210,7 @@ def d02gr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("mutated "), F.col("text")).alias("text"),
     )
     base = docs.unionByName(verbatim).unionByName(mutated)
-    return DD.group_rep_near_pairs(base, threshold=0.5).orderBy("id_a", "id_b")
+    return DD.group_rep_near_pairs(base, threshold=0.5)
 
 
 @query(
@@ -232,8 +232,8 @@ def d02gr(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM d a, d b
       WHERE a.doc_id < b.doc_id
-        AND round(len(list_intersect(a.sh, b.sh)) /
-                  greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1), 6)
+        AND len(list_intersect(a.sh, b.sh)) /
+                  greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1)
             >= 0.5
     ),
     e AS (SELECT id_a AS src, id_b AS dst FROM p
@@ -273,7 +273,7 @@ def d02gs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("mutated "), F.col("text")).alias("text"),
     )
     base = docs.unionByName(verbatim).unionByName(mutated)
-    return DD.group_rep_survivors(base, threshold=0.5).orderBy("doc_id")
+    return DD.group_rep_survivors(base, threshold=0.5)
 
 
 @query("d02_minhash_lsh_ml_pairs")  # rows-only: MLlib hashing is engine-specific
@@ -281,13 +281,13 @@ def d02ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MLlib MinHashLSH variant of d02 — same self-seeded mutated
     corpus, same (id_a, id_b, jaccard) contract."""
     base = _mutated_corpus(spark, sf_dir)
-    return DD.minhash_lsh_pairs_ml(base, threshold=0.5).orderBy("id_a", "id_b")
+    return DD.minhash_lsh_pairs_ml(base, threshold=0.5)
 
 
 @query("d02_simhash_candidates")  # rows-only: xxhash64-based signature
 def d02c(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _mutated_corpus(spark, sf_dir, mutate="suffix")
-    return DD.simhash_candidates(base, max_hamming=3).orderBy("id_a", "id_b")
+    return DD.simhash_candidates(base, max_hamming=3)
 
 
 @query(
@@ -304,8 +304,8 @@ def d02c(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM d a, d b
       WHERE a.doc_id < b.doc_id
-        AND round(len(list_intersect(a.sh, b.sh)) /
-              greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1), 6)
+        AND len(list_intersect(a.sh, b.sh)) /
+              greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1)
             >= 0.8
     )
     SELECT CAST(count(*) AS BIGINT) AS n_exact_high, true AS recall_ok FROM ex
@@ -356,8 +356,8 @@ def d02sr(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM d a, d b
       WHERE a.doc_id < b.doc_id
-        AND round(len(list_intersect(a.sh, b.sh)) /
-                  greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1), 6)
+        AND len(list_intersect(a.sh, b.sh)) /
+                  greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1)
             >= 0.5
     ),
     e AS (SELECT id_a AS src, id_b AS dst FROM p
@@ -380,7 +380,7 @@ def d02e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised by d02_near_dedup_minhash and pytest."""
     base = _mutated_corpus(spark, sf_dir)
     pairs = DD.ngram_jaccard_pairs(base, max_rows=None, min_jaccard=0.5)
-    return DD.near_dedup(base, pairs=pairs).select("doc_id").orderBy("doc_id")
+    return DD.near_dedup(base, pairs=pairs).select("doc_id")
 
 
 @query("d02_near_dedup_minhash")  # rows-only: LSH pairing is engine-specific
@@ -389,7 +389,7 @@ def d02f(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering. Rows-only (LSH recall is engine-specific); recall vs
     the exact path is pinned in tests/test_tier_d.py."""
     base = _mutated_corpus(spark, sf_dir)
-    return DD.near_dedup(base, threshold=0.5).select("doc_id").orderBy("doc_id")
+    return DD.near_dedup(base, threshold=0.5).select("doc_id")
 
 
 @query(
@@ -808,7 +808,6 @@ def d04(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("nb"), 4).alias("avg_bpe_tokens"),
             F.round(F.avg("nc"), 4).alias("avg_chars"),
         )
-        .transform(bounded_sort, "lang", max_rows=5)
     )
 
 
@@ -919,14 +918,13 @@ def d04g(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction. Every signal is an exact integer quotient, so the raw
     doubles hash-match across engines unrounded. Per-row column
     expressions only — quadratic in each doc's distinct grams,
-    embarrassingly parallel, zero shuffles before the ORDER BY (the
-    same shuffle-free contract as the d04 family plan test)."""
+    embarrassingly parallel, zero shuffles (the same shuffle-free
+    contract as the d04 family plan test)."""
     docs = T(spark, sf_dir, "documents")
     # round 19 (bit-equal outputs, oracle re-verified): the token array
     # is materialized ONCE and all three gram widths derive from it —
     # the interpreted split+filter tokenizer was re-evaluated per
-    # signal (measured 1.8 s -> 0.9 s at sf0.1). The output is one row
-    # per document, so it keeps the distributed orderBy.
+    # signal (measured 1.8 s -> 0.9 s at sf0.1).
     w = F.col("__w")
     return (
         docs.select("doc_id", "text", TX.words("text").alias("__w"))
@@ -937,7 +935,6 @@ def d04g(spark: SparkSession, sf_dir: str) -> DataFrame:
             TX.top_ngram_frac("text", 3, words_col=w).alias("top3_frac"),
             TX.dup_ngram_frac("text", 5, words_col=w).alias("dup5_frac"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -983,7 +980,7 @@ def d05w(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``decode_image``), which genuinely need external libraries."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_wav_assets(docs)
-    return MM.decode_wav_features(assets).orderBy("asset_id")
+    return MM.decode_wav_features(assets)
 
 
 @query(
@@ -1022,7 +1019,7 @@ def d05i(spark: SparkSession, sf_dir: str) -> DataFrame:
     Means are exact-integer-sum / count, emitted unrounded."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_bmp_assets(docs)
-    return MM.decode_bmp_features(assets).orderBy("asset_id")
+    return MM.decode_bmp_features(assets)
 
 
 @query(
@@ -1069,7 +1066,7 @@ def d05p(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-sum / count, emitted unrounded."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_png_assets(docs)
-    return MM.decode_png_features(assets).orderBy("asset_id")
+    return MM.decode_png_features(assets)
 
 
 @query(
@@ -1115,7 +1112,7 @@ def d05j(spark: SparkSession, sf_dir: str) -> DataFrame:
     value. Means are exact-integer-sum / count, emitted unrounded."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_jpeg_assets(docs)
-    return MM.decode_jpeg_features(assets).orderBy("asset_id")
+    return MM.decode_jpeg_features(assets)
 
 
 @query(
@@ -1197,7 +1194,7 @@ def d05cj(spark: SparkSession, sf_dir: str) -> DataFrame:
     (16-aligned, distinct from every other asset family)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_color_jpeg_assets(docs)
-    return MM.decode_color_jpeg_features(assets).orderBy("asset_id")
+    return MM.decode_color_jpeg_features(assets)
 
 
 @query(
@@ -1251,7 +1248,6 @@ def d05rz(spark: SparkSession, sf_dir: str) -> DataFrame:
     resized = MM.resize_bmp_nearest(assets, max_side=8)
     return (
         MM.decode_bmp_features(resized.select("asset_id", "payload"))
-        .orderBy("asset_id")
     )
 
 
@@ -1299,7 +1295,7 @@ def d05avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     movi_bytes replays the frame-size closed form with a range join."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_avi_assets(docs)
-    return MM.parse_avi_features(assets).orderBy("asset_id")
+    return MM.parse_avi_features(assets)
 
 
 @query(
@@ -1348,7 +1344,7 @@ def d05avif(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the pixel ramps with a 3-way range join."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_dib_avi_assets(docs)
-    return MM.decode_avi_frame_features(assets).orderBy("asset_id", "frame_idx")
+    return MM.decode_avi_frame_features(assets)
 
 
 @query(
@@ -1396,7 +1392,7 @@ def d05mp3(spark: SparkSession, sf_dir: str) -> DataFrame:
     a range join and the same 14-entry bitrate table."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp3_assets(docs)
-    return MM.parse_mp3_features(assets).orderBy("asset_id")
+    return MM.parse_mp3_features(assets)
 
 
 def _si_bits_sql(p: int, w: int) -> str:
@@ -1485,7 +1481,7 @@ def d05mp3si(spark: SparkSession, sf_dir: str) -> DataFrame:
     censuses (operators/multimodal.py:parse_mp3_sideinfo)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp3_assets(docs)
-    return MM.parse_mp3_sideinfo(assets).orderBy("asset_id")
+    return MM.parse_mp3_sideinfo(assets)
 
 
 @query(
@@ -1535,7 +1531,7 @@ def d05mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation raise loudly (pytest twins, tests/test_multimodal_wav.py)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mjpeg_avi_assets(docs)
-    return MM.decode_mjpeg_frame_features(assets).orderBy("asset_id", "frame_idx")
+    return MM.decode_mjpeg_frame_features(assets)
 
 
 @query(
@@ -1593,7 +1589,7 @@ def d05rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal.decode_image)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_rle8_avi_assets(docs)
-    return MM.decode_rle8_frame_features(assets).orderBy("asset_id", "frame_idx")
+    return MM.decode_rle8_frame_features(assets)
 
 
 @query(
@@ -1671,7 +1667,7 @@ def d05mp2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_mp2.py)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp2_assets(docs)
-    return MM.decode_mp2_subband_features(assets).orderBy("asset_id")
+    return MM.decode_mp2_subband_features(assets)
 
 
 @query(
@@ -1712,7 +1708,7 @@ def d05tar(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload running sum) as a window over the member sequence."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_tar_shards(docs)
-    return MM.tar_shard_manifest(assets).orderBy("asset_id", "data_offset")
+    return MM.tar_shard_manifest(assets)
 
 
 @query(
@@ -1757,7 +1753,7 @@ def d05pj(spark: SparkSession, sf_dir: str) -> DataFrame:
     mp3-sample and video-codec decode remain stubbed."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_progressive_jpeg_assets(docs)
-    return MM.decode_progressive_jpeg_features(assets).orderBy("asset_id")
+    return MM.decode_progressive_jpeg_features(assets)
 
 
 # --- D6-D8: streaming ---------------------------------------------------------
@@ -2015,7 +2011,7 @@ def d14(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(TX.top_word_frac("text"), 4).alias("top_word_frac"),
         TX.stopword_hits("text").alias("stopword_hits"),
         TX.gopher_pass("text").alias("keep"),
-    ).orderBy("doc_id")
+    )
 
 
 # --- D3+: int8 embedding quantization -----------------------------------------
@@ -2070,7 +2066,7 @@ def d16(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             < 1e-5
         ).alias("mse_below_tol"),
-    ).orderBy("vec_id")
+    )
 
 
 # --- D4+: corpus-trained trigram LM quality score -----------------------------
@@ -2106,7 +2102,7 @@ def d17(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.round("mean_logprob", 4).alias("mean_logprob"),
         "n_trigrams",
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -2311,8 +2307,8 @@ def d08wap(spark: SparkSession, sf_dir: str) -> DataFrame:
                  greatest(len(ne.sh) + len(ex.sh) - len(list_intersect(ne.sh, ex.sh)), 1), 6)
              AS jaccard
     FROM ne, ex
-    WHERE round(len(list_intersect(ne.sh, ex.sh)) /
-                greatest(len(ne.sh) + len(ex.sh) - len(list_intersect(ne.sh, ex.sh)), 1), 6)
+    WHERE len(list_intersect(ne.sh, ex.sh)) /
+                greatest(len(ne.sh) + len(ex.sh) - len(list_intersect(ne.sh, ex.sh)), 1)
           >= 0.5
     ORDER BY new_id, existing_id
     """,
@@ -2327,9 +2323,7 @@ def d02pp(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1) — the output equals the exact bipartite pair set and the
     DuckDB string-gram twin is a full-strength oracle. Same ingest
     shape as d02_incremental_lsh_probe: a new batch of mutated copies
-    of every 20th doc probed against the whole existing corpus. The
-    batch is a fixed fraction of the corpus, so the pair output grows
-    with it and keeps the distributed orderBy."""
+    of every 20th doc probed against the whole existing corpus."""
     docs = T(spark, sf_dir, "documents")
     existing = docs.select("doc_id", "text")
     new = docs.filter(F.col("doc_id") % 20 == 0).select(
@@ -2338,7 +2332,6 @@ def d02pp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         DD.prefix_filter_probe(existing, new, threshold=0.5)
-        .orderBy("new_id", "existing_id")
     )
 
 
@@ -2390,7 +2383,7 @@ def d02g(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return DD.minhash_lsh_probe(
         existing, new, threshold=0.5, num_hashes=32, bands=32
-    ).orderBy("new_id", "existing_id")
+    )
 
 
 @query(
@@ -2457,7 +2450,6 @@ def d08e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "within_eps"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -2628,7 +2620,7 @@ def d87(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return DD.incremental_exact_dedup(docs, new).orderBy("doc_id")
+    return DD.incremental_exact_dedup(docs, new)
 
 
 @query(
@@ -2667,9 +2659,7 @@ def d88(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive FROM the group counts — one scan; the top-k rank window is
     per-source (WindowGroupLimit)."""
     docs = T(spark, sf_dir, "documents")
-    return TX.distinctive_terms(docs, "source", "text", k=5, min_count=5).orderBy(
-        "source", "rank"
-    )
+    return TX.distinctive_terms(docs, "source", "text", k=5, min_count=5)
 
 
 @query(
@@ -2704,9 +2694,7 @@ def d89(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup); md5-prefix hashing so the oracle selects the IDENTICAL
     fingerprints."""
     docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    return TX.winnowing_fingerprints(docs, k=3, window=4).orderBy(
-        "doc_id", "fingerprint"
-    )
+    return TX.winnowing_fingerprints(docs, k=3, window=4)
 
 
 _D92_SUMS = ", ".join(f"sum(qv[{i}])" for i in range(1, 65))
@@ -2835,7 +2823,6 @@ def d08f(spark: SparkSession, sf_dir: str) -> DataFrame:
             "present",
             bloom_might_contain(F.col("probe_key")).alias("might_contain"),
         )
-        .orderBy("probe_key")
     )
 
 
@@ -2868,7 +2855,7 @@ def d110warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Framing/magic/truncation violations raise loudly (pytest)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_warc_assets(docs)
-    return MM.parse_warc_responses(assets).orderBy("asset_id")
+    return MM.parse_warc_responses(assets)
 
 
 @query(
@@ -2923,7 +2910,7 @@ def d05gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel at 100 TB, the sanctioned escape hatch."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_gif_assets(docs)
-    return MM.decode_gif_features(assets).orderBy("asset_id")
+    return MM.decode_gif_features(assets)
 
 
 @query(
@@ -2997,7 +2984,7 @@ def d05mp3scf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-pinned."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_mp3_scf_assets(docs)
-    return MM.decode_mp3_scalefactors(assets).orderBy("asset_id")
+    return MM.decode_mp3_scalefactors(assets)
 
 
 @query(
@@ -3117,7 +3104,7 @@ def d05rice(spark: SparkSession, sf_dir: str) -> DataFrame:
     overrun / unsupported order raise loudly (pytest)."""
     docs = T(spark, sf_dir, "documents")
     assets = MM.synthesize_rice_audio_assets(docs)
-    return MM.decode_rice_audio_features(assets).orderBy("asset_id")
+    return MM.decode_rice_audio_features(assets)
 
 
 @query(
@@ -3206,7 +3193,6 @@ def d08up(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("k").alias("n_keys"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
-        .transform(bounded_sort, "status", max_rows=2)
     )
 
 
@@ -3228,8 +3214,8 @@ def d08up(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(len(list_intersect(q.sh, d.sh))
                  / greatest(len(q.sh), 1), 6) AS containment
     FROM q, d
-    WHERE round(len(list_intersect(q.sh, d.sh))
-                / greatest(len(q.sh), 1), 6) >= 0.5
+    WHERE len(list_intersect(q.sh, d.sh))
+                / greatest(len(q.sh), 1) >= 0.5
     """,
 )
 def d02cont(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3410,7 +3396,6 @@ def d08tailmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__n").cast("bigint").alias("n_rows"),
             F.col("__sum_event_id").cast("bigint").alias("sum_eid"),
         )
-        .transform(bounded_sort, "grp", max_rows=10)
     )
 
 

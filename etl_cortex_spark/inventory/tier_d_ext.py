@@ -18,7 +18,7 @@ from etl_cortex_spark.operators import llmprep as LP
 from etl_cortex_spark.operators import search as SR
 from etl_cortex_spark.operators import textops as TX
 from etl_cortex_spark.inventory.tier_d import _WORDS, _bucket_sql, _shingles_sql
-from etl_cortex_spark.operators.localframe import bounded_sort, local_df
+from etl_cortex_spark.operators.localframe import local_df
 from etl_cortex_spark.queries import T, query
 
 
@@ -46,7 +46,7 @@ def d18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """llmprep.chunk_documents: 64-word windows, 16-word overlap,
     stride 48. Pure generator expression — zero shuffles."""
     docs = T(spark, sf_dir, "documents")
-    return LP.chunk_documents(docs, size=64, overlap=16).orderBy("doc_id", "chunk_id")
+    return LP.chunk_documents(docs, size=64, overlap=16)
 
 
 # --- D19: BM25 lexical retrieval ----------------------------------------------
@@ -100,7 +100,7 @@ def d19ph(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = keep.unionByName(seeded)
     from etl_cortex_spark.operators.search import phrase_search
 
-    return phrase_search(base, "alpha beta").orderBy("doc_id")
+    return phrase_search(base, "alpha beta")
 
 
 @query(
@@ -180,7 +180,6 @@ def d20(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dup).alias("n_dup_grams"),
             F.round(F.sum(dup) / F.count(F.lit(1)), 4).alias("dup_frac"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -289,7 +288,7 @@ def d24a(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings")
     cents = CL.initial_centroids(emb, _CENTROID_K)
     out = CL.assign_centroids(emb, cents)
-    return out.select("vec_id", "cluster").orderBy("vec_id")
+    return out.select("vec_id", "cluster")
 
 
 def _kmeans_oracle_sql(iters: int = 3, k: int = 8, q: int = 6) -> str:
@@ -381,7 +380,6 @@ def d24b(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("wcss"),
         )
-        .orderBy("cluster")
     )
 
 
@@ -438,7 +436,6 @@ def d25(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = CL.semantic_dedup(seeded, threshold=0.99, n_planes=6, seed=7)
     return (
         out.select("vec_id", "label", "bucket")
-        .orderBy("vec_id")
     )
 
 
@@ -621,7 +618,7 @@ def d25probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, _probe_batch(spark, sf_dir), threshold=0.99,
         n_planes=6, seed=7,
     )
-    return out.orderBy("vec_id")
+    return out
 
 
 @query(
@@ -768,7 +765,7 @@ def d26(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return best_fuzzy_match(
         pairs, left_id="dirty_id", right_id="c_custkey"
-    ).orderBy("dirty_id")
+    )
 
 
 # --- D8 extension: stream-stream interval join --------------------------------
@@ -924,7 +921,6 @@ def d27(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = pagerank(edges, nodes, iters=3, damping=0.85)
     return (
         pr.select("node", F.round("pr", 6).alias("pr"))
-        .transform(bounded_sort, "node", max_rows=25)
     )
 
 
@@ -1024,9 +1020,7 @@ def d29(spark: SparkSession, sf_dir: str) -> DataFrame:
         (30.0 + (F.col("doc_id") % 7) * 10.0).alias("duration_s"),
         (24 + (F.col("doc_id") % 2) * 6).cast("double").alias("fps"),
     )
-    return plan_frame_samples(assets, every_s=2.0, max_frames=8).orderBy(
-        "asset_id", "sample_idx"
-    )
+    return plan_frame_samples(assets, every_s=2.0, max_frames=8)
 
 
 @query(
@@ -1063,7 +1057,7 @@ def d30(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return plan_audio_chunks(
         assets, window_s=5, sample_rate=16_000, bytes_per_sample=2
-    ).orderBy("asset_id", "chunk_id")
+    )
 
 
 # --- D31: entity resolution end-to-end (fuzzy pairs -> clusters -> canonical) -
@@ -1138,7 +1132,7 @@ def d31(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components(nodes, pairs)
     return cc.select(
         F.col("node").alias("id"), F.col("label").alias("canonical_id")
-    ).orderBy("id")
+    )
 
 
 # --- D33: Python UDTF surface (row-expanding escape hatch) --------------------
@@ -1189,7 +1183,6 @@ def d33(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         SELECT d.doc_id, s.sent_idx, s.sentence, s.n_chars
         FROM d33_docs d, LATERAL sentence_split(d.text) s
-        ORDER BY d.doc_id, s.sent_idx
         """
     )
 
@@ -1269,9 +1262,7 @@ def d36(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = ed.crossJoin(
         F.broadcast(ed.agg(F.avg("w").alias("avg_w")))
     ).filter(F.col("w") > F.col("avg_w"))
-    return bounded_sort(
-        triangle_count(cut, order_by_degree=True), "node", max_rows=25
-    )
+    return triangle_count(cut, order_by_degree=True)
 
 
 def _pq_oracle(m: int = 4, k: int = 8, d_sub: int = 16) -> str:
@@ -1359,7 +1350,7 @@ def d39bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     source = ed.agg(F.min("dst")).first()[0]  # bounded driver peek (1 scalar)
-    return bfs_hops(ed, int(source)).orderBy("node")
+    return bfs_hops(ed, int(source))
 
 
 @query("d37_pq_encode", oracle=_pq_oracle())
@@ -1378,7 +1369,7 @@ def d37(spark: SparkSession, sf_dir: str) -> DataFrame:
     return codes.select(
         "vec_id",
         *[F.col("codes")[j].alias(f"code{j}") for j in range(4)],
-    ).orderBy("vec_id")
+    )
 
 
 # --- D56: hybrid lexical+vector retrieval (RRF) -------------------------------
@@ -1484,7 +1475,7 @@ def d76(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
     )
     nodes = n.select(F.col("n_nationkey").alias("node"))
-    return label_propagation(nodes, edges, iters=3).orderBy("node")
+    return label_propagation(nodes, edges, iters=3)
 
 
 # --- D77: market-basket co-occurrence ----------------------------------------
@@ -1572,7 +1563,6 @@ def d77(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("a_orders").cast("double") * F.col("b_orders"))
             ).alias("lift"),
         )
-        .transform(bounded_sort, F.desc("pair_orders"), "part_a", "part_b", max_rows=20)
     )
 
 
@@ -1674,7 +1664,7 @@ def d101(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator default self-sizes from the corpus count (round 14)
     return SIM.bitext_margin_pairs(
         src, organic.unionByName(planted), k=4, threshold=1.5, n_planes=6
-    ).orderBy("src_id")
+    )
 
 
 @query(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from etl_cortex_spark.inventory.tier_d import _WORDS, _bucket_sql, _shingles_sql
 from etl_cortex_spark.operators import llmprep as LP
 from etl_cortex_spark.operators import textops as TX
-from etl_cortex_spark.operators.localframe import bounded_sort, local_df
+from etl_cortex_spark.operators.localframe import local_df
 from etl_cortex_spark.queries import T, query
 
 
@@ -139,7 +139,7 @@ def d11(spark: SparkSession, sf_dir: str) -> DataFrame:
         default_fraction=0.03125,
     )
     return (
-        sampled.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")).orderBy("lang")
+        sampled.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     )
 
 
@@ -220,7 +220,7 @@ def d13(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").select(
         "doc_id", TX.n_tokens("text").alias("n_tokens")
     )
-    return LP.pack_sequences(docs, max_tokens=2048).orderBy("bin_id", "doc_id")
+    return LP.pack_sequences(docs, max_tokens=2048)
 
 
 @query(
@@ -277,7 +277,6 @@ def d10p(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(TX.n_tokens("text")).alias("total_tokens"),
         )
-        .orderBy("lang")
     )
 
 
@@ -317,7 +316,7 @@ def d15(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text"), F.lit("\n"), F.lit("click here to subscribe now")
         ).alias("text"),
     )
-    return LP.line_dedup(seeded, min_count=3).orderBy("doc_id")
+    return LP.line_dedup(seeded, min_count=3)
 
 
 @query(
@@ -361,7 +360,6 @@ def d34(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col("value") > F.col("p95")).cast("int")).alias("n_clipped_high"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -416,7 +414,6 @@ def d38(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
         )
-        .orderBy("split")
     )
 
 
@@ -568,7 +565,6 @@ def d52(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", "n_docs", "n_tokens", "parts", "rate_256",
             "est_tokens", "n_docs_sampled", "n_tokens_sampled",
         )
-        .orderBy("source")
     )
 
 
@@ -615,7 +611,6 @@ def d53(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         docs.select("doc_id", TX.strip_markup(html).alias("text"))
-        .orderBy("doc_id")
     )
 
 
@@ -701,7 +696,7 @@ def d54(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("doc_id") % 2 == 0, F.concat(F.lit("#frag"), d)).otherwise(""),
         )
     )
-    return docs.select("doc_id", TX.norm_url(url).alias("url")).orderBy("doc_id")
+    return docs.select("doc_id", TX.norm_url(url).alias("url"))
 
 
 # --- D55: BPE pair-count step -------------------------------------------------
@@ -890,7 +885,7 @@ def d62(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = assigned.filter(F.col("split") == "test").select("text")
     return LP.contamination_check(
         train, test, k=8, min_overlap=0.05
-    ).orderBy("doc_id")
+    )
 
 
 # --- D63: hashed-feature linear quality classifier ---------------------------
@@ -1019,7 +1014,7 @@ def d82(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").select(
         "source", "doc_id", TX.n_tokens("text").alias("n_tokens")
     )
-    return LP.concat_chunk_packing(docs, ctx=512).orderBy("source", "doc_id")
+    return LP.concat_chunk_packing(docs, ctx=512)
 
 
 _QUALITY_SQL = f"""round(0.4 * least(length(text) / 500.0, 1.0)
@@ -1060,7 +1055,7 @@ def d83(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     return LP.preference_pairs(
         docs, "source", "doc_id", TX.quality_score("text"), k=2
-    ).orderBy("source", "chosen_id", "rejected_id")
+    )
 
 
 @query(
@@ -1088,7 +1083,7 @@ def d84(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sums, one unrounded IEEE division each; |langs| output
     rows, map-side combinable."""
     docs = T(spark, sf_dir, "documents")
-    return LP.tokenizer_fertility(docs).orderBy("lang")
+    return LP.tokenizer_fertility(docs)
 
 
 @query(
@@ -1128,7 +1123,7 @@ def d85(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     return LP.curriculum_order(
         docs, "lang", TX.n_tokens("text"), "doc_id"
-    ).orderBy("position")
+    )
 
 
 @query(
@@ -1157,7 +1152,7 @@ def d86(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     return LP.temperature_mix_plan(
         docs, "source", F.col("n_chars"), budget=100_000
-    ).orderBy("source")
+    )
 
 
 @query(
@@ -1199,7 +1194,7 @@ def d91(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over each doc's shingle array — one md5 + three O(1)
     element_at lookups per gram, NO join and NO explode: the only
     shuffles in the whole plan are the filter-build aggregate (≤
-    3·65536 ints, map-side combined) and the final orderBy. Zero false
+    3·65536 ints, map-side combined). Zero false
     negatives by construction (a built-in gram always finds its three
     bits set), so the flagged set provably covers D12's exact flagged
     set — pinned as a superset property in tests/test_sketch.py. The
@@ -1230,7 +1225,6 @@ def d91(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("n_candidates") / F.greatest("n_grams", F.lit(1)), 6),
         )
         .filter(F.col("bloom_overlap") >= 0.5)
-        .orderBy("doc_id")
     )
 
 
@@ -1268,9 +1262,7 @@ def d96(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cortex_spark.operators.llmprep import sampled_negatives
 
     docs = T(spark, sf_dir, "documents")
-    return sampled_negatives(docs, F.col("doc_id") % 25 == 0, k=4).orderBy(
-        "anchor_id", "neg_idx"
-    )
+    return sampled_negatives(docs, F.col("doc_id") % 25 == 0, k=4)
 
 
 @query(
@@ -1349,7 +1341,7 @@ def d12sem(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
     train = organic.unionByName(planted)
-    return LP.semantic_contamination(train, bench, threshold=0.99).orderBy("bench_id")
+    return LP.semantic_contamination(train, bench, threshold=0.99)
 
 
 def _sem_lsh_bench_train(spark: SparkSession, sf_dir: str):
@@ -1437,7 +1429,7 @@ def d12semlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench, train = _sem_lsh_bench_train(spark, sf_dir)
     return LP.semantic_contamination_lsh(
         train, bench, threshold=0.99, n_planes=6, seed=7, probe_radius=1
-    ).orderBy("bench_id")
+    )
 
 
 @query(
@@ -1581,7 +1573,7 @@ def d103(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("a.b.malware.co"))
         .alias("host"),
     )
-    return LP.domain_blocklist_filter(docs, list(_BLOCKLIST)).orderBy("doc_id")
+    return LP.domain_blocklist_filter(docs, list(_BLOCKLIST))
 
 
 @query(
@@ -1648,7 +1640,7 @@ def d104(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return calibration_audit(
         scored, "score", "label", n_buckets=10, lo=-1.0, hi=1.0
-    ).orderBy("bucket")
+    )
 
 
 @query(
@@ -1703,9 +1695,7 @@ def d105(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = docs.filter(
         (F.col("doc_id") % 2 == 1) & (F.col("doc_id") % 7 != 0)
     ).select((F.col("nt") / 20.0).alias("v"))
-    return psi_drift(ref, cur, "v", n_buckets=10, lo=0.0, hi=10.0).orderBy(
-        "bucket"
-    )
+    return psi_drift(ref, cur, "v", n_buckets=10, lo=0.0, hi=10.0)
 
 
 @query(
@@ -1766,7 +1756,7 @@ def d106(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join("ids", ",").alias("ids_csv"),
         "n_tokens",
         "n_unk",
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -1919,9 +1909,7 @@ def d108(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("source") == min_source) & (F.col("doc_id") % 2 == 0)
     ).select((F.col("doc_id") + 40_000_000).alias("doc_id"), "text", "source")
     corpus = docs.unionByName(planted)
-    return LP.dedup_composition_report(corpus, group_col="source").orderBy(
-        "source"
-    )
+    return LP.dedup_composition_report(corpus, group_col="source")
 
 
 @query(
@@ -1970,7 +1958,7 @@ def d109(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("doc_id") % 11 == 0, F.lit("\x07")).otherwise(F.lit("")),
         ).alias("text"),
     )
-    return TX.encoding_audit(seeded).orderBy("doc_id")
+    return TX.encoding_audit(seeded)
 
 
 @query(
@@ -2028,7 +2016,6 @@ def d112deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("__toks").alias("sum_tokens"),
             F.min("__toks").alias("min_tokens"),
         )
-        .transform(bounded_sort, "source", "decile", max_rows=20 * 10)
     )
 
 

@@ -331,7 +331,7 @@ def d72(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a.doc_id") % 20 >= 15)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
     )
-    return connected_components_star(docs, chain.unionAll(star)).orderBy("node")
+    return connected_components_star(docs, chain.unionAll(star))
 
 
 # --- D78: group-statistic imputation -----------------------------------------
@@ -350,7 +350,6 @@ SELECT s.event_id, s.event_type,
        COALESCE(s.v, m.med) AS value_imputed,
        CAST(s.v IS NULL AS INT) AS was_imputed
 FROM s JOIN m ON s.event_type = m.event_type
-ORDER BY s.event_id
 """
 
 
@@ -415,7 +414,7 @@ def d79(spark: SparkSession, sf_dir: str) -> DataFrame:
         (640 + (F.col("doc_id") % 5) * 320).cast("long").alias("width"),
         (480 + (F.col("doc_id") % 3) * 360).cast("long").alias("height"),
     )
-    return plan_image_tiles(assets, tile=512).orderBy("asset_id", "tile_x", "tile_y")
+    return plan_image_tiles(assets, tile=512)
 
 
 # --- D80: corpus concentration audit -----------------------------------------
@@ -476,7 +475,6 @@ s AS (
 SELECT lang, split, count(*) AS n_docs,
        CAST(min(doc_id) AS BIGINT) AS min_doc, CAST(max(doc_id) AS BIGINT) AS max_doc
 FROM s GROUP BY lang, split
-ORDER BY lang, split
 """
 
 
@@ -525,6 +523,4 @@ def d52b(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort, no shuffle beyond the top-k; the oracle replays the
     identical integer priority and cut."""
     docs = T(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    return LP.weighted_priority_sample(docs, k=40, weight_col="n_chars").orderBy(
-        "__priority", "doc_id"
-    )
+    return LP.weighted_priority_sample(docs, k=40, weight_col="n_chars")

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators.skew import salted_agg, salted_broadcast_left
-from etl_cortex_spark.operators.localframe import bounded_sort, local_df
+from etl_cortex_spark.operators.localframe import local_df
 from etl_cortex_spark.queries import T, query
 
 
@@ -50,7 +50,7 @@ def scale_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.round("min_price_raw", 2).alias("min_price"),
         F.round("max_price_raw", 2).alias("max_price"),
-    ).orderBy("l_returnflag")
+    )
 
 
 @query(
@@ -138,7 +138,6 @@ def scale_binned_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_hits"),
             F.round(F.sum("l_quantity"), 2).alias("qty"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -177,7 +176,7 @@ def scale_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         morton_key(
             F.col("o_custkey"), F.col("o_totalprice"), x_range=_Z_XR, y_range=_Z_YR
         ).alias("zkey"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -229,7 +228,6 @@ def scale_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sketch_within_5pct"
             ),
         )
-        .orderBy("r_name")
     )
 
 
@@ -316,7 +314,6 @@ def scale_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "within_eps"
             ),
         )
-        .orderBy("suppkey")
     )
 
 
@@ -371,7 +368,6 @@ def scale_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_total))
         .filter(F.col("cnt") > F.lit(support) * F.col("__n"))
         .select("key", "cnt")
-        .transform(bounded_sort, "key", max_rows=int(1 / support))
     )
 
 
@@ -426,7 +422,6 @@ def scale_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -501,7 +496,6 @@ def scale_sample_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         med.withColumnRenamed("p50_c_acctbal", "p50_acctbal")
         .join(counts, "n_regionkey")
-        .orderBy("n_regionkey")
     )
 
 
@@ -565,7 +559,7 @@ def scale_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained = incremental_join_merge(
         view, delta, right, ["o_orderkey"], "o_custkey"
     )
-    return maintained.orderBy("o_orderkey")
+    return maintained
 
 
 #: the two projections scale_bucketed_join stores (shared with its
@@ -634,7 +628,6 @@ def scale_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "revenue"
             ),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -695,7 +688,6 @@ def scale_bucketed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue"),
         )
-        .transform(bounded_sort, "o_orderpriority", max_rows=5)
     )
 
 
@@ -769,7 +761,6 @@ def scale_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        .orderBy("o_year")
     )
 
 
@@ -815,7 +806,7 @@ def scale_delete_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return retract_agg(
         state, retr, ["event_date", "event_type"], sum_cols=["total_cents"]
-    ).orderBy("event_date", "event_type")
+    )
 
 
 @query(
@@ -877,8 +868,7 @@ def scale_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    out = frames[0].unionByName(frames[1]).unionByName(frames[2])
-    return bounded_sort(out, "version", max_rows=len(frames))
+    return frames[0].unionByName(frames[1]).unionByName(frames[2])
 
 
 @query(
@@ -941,8 +931,7 @@ def scale_snapshot_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    out = frames[0].unionByName(frames[1])
-    return bounded_sort(out, "version", max_rows=len(frames))
+    return frames[0].unionByName(frames[1])
 
 
 @query(
@@ -1117,7 +1106,6 @@ def scale_snapshot_partition_evolution(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        .transform(bounded_sort, "gen", max_rows=3)
     )
 
 
@@ -1185,7 +1173,6 @@ def scale_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             "version", "n_files", "n_added", "n_removed",
             "n_delete_entries", "has_layout",
         )
-        .transform(bounded_sort, "version", max_rows=5)
     )
 
 
@@ -1326,7 +1313,6 @@ def scale_snapshot_hidden_partitioning(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        .transform(bounded_sort, "month", max_rows=12)
     )
 
 
@@ -1389,7 +1375,6 @@ def scale_snapshot_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        .transform(bounded_sort, "_commit_version", max_rows=3)
     )
 
 
@@ -1470,8 +1455,7 @@ def scale_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    out = frames[0].unionByName(frames[1])
-    return bounded_sort(out, "version", max_rows=len(frames))
+    return frames[0].unionByName(frames[1])
 
 
 @query(
@@ -1553,8 +1537,7 @@ def scale_snapshot_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    out = frames[0].unionByName(frames[1]).unionByName(frames[2])
-    return bounded_sort(out, "version", max_rows=len(frames))
+    return frames[0].unionByName(frames[1]).unionByName(frames[2])
 
 
 @query(
@@ -1750,8 +1733,7 @@ def scale_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    out = frames[0].unionByName(frames[1])
-    return bounded_sort(out, "version", max_rows=len(frames))
+    return frames[0].unionByName(frames[1])
 
 
 @query(
@@ -1886,8 +1868,7 @@ def scale_changes_downstream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir_next = os.path.join(base, f"state_v{v}")
         merged.write.parquet(state_dir_next)
         state_dir = state_dir_next
-    out = spark.read.parquet(state_dir)
-    return bounded_sort(out, "o_orderstatus", max_rows=3)
+    return spark.read.parquet(state_dir)
 
 
 @query(
@@ -1956,7 +1937,6 @@ def scale_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
                 F.when(F.coalesce(F.col("o_flagged"), F.lit(False)), 1).otherwise(0)
             ).alias("n_flagged_true"),
         )
-        .transform(bounded_sort, "o_orderstatus", max_rows=3)
     )
 
 
@@ -2156,8 +2136,7 @@ def scale_snapshot_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("version", "n_orders", "total_price")
         )
-    out = frames[0].unionByName(frames[1]).unionByName(frames[2])
-    return bounded_sort(out, "version", max_rows=len(frames))
+    return frames[0].unionByName(frames[1]).unionByName(frames[2])
 
 
 @query(
@@ -2245,7 +2224,7 @@ def scale_snapshot_delete_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
-    return bounded_sort(out, "version", max_rows=len(frames))
+    return out
 
 
 @query(
@@ -2300,8 +2279,7 @@ def scale_snapshot_bucket_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for k in (7, 42, 101)
     ]
-    out = reduce(lambda a, b: a.unionByName(b), parts)
-    return bounded_sort(out, "c_custkey", max_rows=len(parts))
+    return reduce(lambda a, b: a.unionByName(b), parts)
 
 
 @query(
@@ -2353,7 +2331,6 @@ def scale_snapshot_cdf_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
-        .transform(bounded_sort, "change_type", max_rows=4)
     )
 
 
@@ -2549,7 +2526,7 @@ def scale_cdc_apply_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = ups.unionByName(dels)
     return apply_changelog(
         orders, changes, ["o_orderkey"], "seq", "op"
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -2612,7 +2589,7 @@ def scale_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_rows",
         (F.col("sum_cents") / 100.0).alias("sum_price"),
         (F.col("sum_cents") / 100.0 / F.col("n_rows")).alias("avg_price"),
-    ).orderBy("month", "o_orderstatus")
+    )
 
 
 @query(
@@ -2673,8 +2650,7 @@ def scale_snapshot_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("tag", "n_orders", "total_price")
         )
-    out = frames[0].unionByName(frames[1])
-    return bounded_sort(out, "tag", max_rows=len(frames))
+    return frames[0].unionByName(frames[1])
 
 
 @query(
@@ -2885,7 +2861,6 @@ def scale_snapshot_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__n").cast("bigint").alias("n_rows"),
             F.round("__sum_x", 2).cast("double").alias("total_value"),
         )
-        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 
@@ -2967,7 +2942,6 @@ def scale_snapshot_cdf_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__n").cast("bigint").alias("n_rows"),
             F.col("__sum_event_id").cast("bigint").alias("sum_eid"),
         )
-        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 
@@ -3099,7 +3073,6 @@ def scale_snapshot_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("eid").cast("bigint").alias("sum_eid"),
         )
-        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 
@@ -3227,7 +3200,6 @@ def scale_snapshot_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("event_id").cast("bigint").alias("sum_eid"),
         )
-        .transform(bounded_sort, "grp", max_rows=8)
     )
 
 

@@ -19,7 +19,6 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.queries import T, query
 from etl_cortex_spark.sinks.files import write_csv, write_parquet
 
@@ -237,7 +236,7 @@ def pyds_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("splits", 8)
         .load()
     )
-    return bounded_sort(df, "doc_id", max_rows=n)
+    return df
 
 
 @query(
@@ -275,7 +274,7 @@ def pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("batch", 200)
         .load()
     )
-    return run_to_memory(stream, "append").orderBy("doc_id")
+    return run_to_memory(stream, "append")
 
 
 @query(
@@ -330,7 +329,7 @@ def pyds_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("path", path)
         .load()
     )
-    return run_to_memory(stream, "append").orderBy("o_orderkey")
+    return run_to_memory(stream, "append")
 
 
 @query(

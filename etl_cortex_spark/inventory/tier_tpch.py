@@ -25,7 +25,6 @@ from etl_cortex_spark.operators.layout import (
     conformed_dim,
     fact_buckets,
 )
-from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.queries import T, query
 
 
@@ -287,7 +286,6 @@ def q5(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-        .transform(bounded_sort, F.desc("revenue"), "n_name", max_rows=25)
     )
 
 
@@ -390,7 +388,6 @@ def q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         shipped_late.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .transform(bounded_sort, "o_orderpriority", max_rows=5)
     )
 
 
@@ -558,7 +555,6 @@ def q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(F.round(F.sum("volume"), 2).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -626,7 +622,6 @@ def q8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -664,7 +659,6 @@ def q12(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(high, 1)).alias("high_line_count"),
             F.count(F.when(~high, 1)).alias("low_line_count"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -701,7 +695,6 @@ def q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -745,7 +738,6 @@ def q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "s_suppkey", "s_name", F.round("total_rev", 2).alias("total_revenue")
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -902,7 +894,6 @@ def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE o_custkey = c.c_custkey
               AND o_orderpriority = '1-URGENT')
         GROUP BY cntrycode
-        ORDER BY cntrycode
         """
     )
 
@@ -1086,7 +1077,6 @@ def q9(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("profit_sum")
         )
-        .transform(bounded_sort, "supp_nation", F.desc("o_year"), max_rows=25 * 7)
     )
 
 
@@ -1167,7 +1157,6 @@ def q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.crossJoin(F.broadcast(total))
         .filter(F.col("__cents") > F.col("__threshold"))
         .select("ps_partkey", (F.col("__cents") / 100.0).alias("value"))
-        .orderBy(F.desc("value"), "ps_partkey")
     )
 
 
@@ -1229,14 +1218,6 @@ def q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(parts), F.col("p_partkey") == F.col("ps_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct(F.col("ps_suppkey")).alias("supplier_cnt"))
-        .transform(
-            bounded_sort,
-            F.desc("supplier_cnt"),
-            "p_brand",
-            "p_type",
-            "p_size",
-            max_rows=25 * 150 * 8,
-        )
     )
 
 
@@ -1320,5 +1301,4 @@ def q20(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .select("s_name", "s_acctbal")
-        .orderBy("s_name")
     )

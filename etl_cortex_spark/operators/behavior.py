@@ -78,7 +78,6 @@ def funnel_counts(
             "n_users",
             F.round(F.col("n_users") / F.col("__first"), 4).alias("conv"),
         )
-        .orderBy("step_idx")
     )
 
 
@@ -112,7 +111,6 @@ def cohort_retention(
         )
         .agg(F.count(F.lit(1)).alias("n_active"))
         .join(sizes, "cohort_week")
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -178,5 +176,4 @@ def experiment_report(
             F.sum((F.col("__goals") > 0).cast("int")).alias("n_converters"),
             F.sum("__goals").alias("n_goal_events"),
         )
-        .orderBy("arm")
     )

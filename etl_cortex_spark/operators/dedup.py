@@ -40,6 +40,20 @@ from etl_cortex_spark.operators.caching import track
 
 from etl_cortex_spark.operators.textops import shingles
 
+#: slack for comparing a double product such as n·t with the exact
+#: rational it stands for
+_EPS = 1e-9
+
+
+def prefix_len(n: F.Column, t: float) -> F.Column:
+    """The AllPairs probe-prefix length ``n − ceil(t·n) + 1`` for a set
+    of ``n`` tokens at threshold ``t``. ``t·n`` is a rounded double:
+    25·0.28 evaluates to 7.000000000000001, whose ceil of 8 would cut
+    the prefix one token short and lose a pair with jaccard exactly t.
+    The ε pulls such products back onto their integer; a prefix one
+    token too long only adds candidates that verification drops."""
+    return n - F.ceil(n * F.lit(t) - F.lit(_EPS)).cast("int") + 1
+
 # 2^61-1 (Mersenne prime) — modulus for the universal hash family.
 _P = (1 << 61) - 1
 _H31 = (1 << 31) - 1
@@ -372,30 +386,28 @@ def prefix_filter_probe(
             .na.fill({"__df": 0})
         )
         w = Window.partitionBy("new_id").orderBy("__df", "__tok")
-        prefix_len = (
-            F.col("__new_n") - F.ceil(F.col("__new_n") * F.lit(t)).cast("int") + 1
-        )
         probe = (
             exploded.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= prefix_len)
+            .filter(F.col("__rn") <= prefix_len(F.col("__new_n"), t))
             .select("new_id", "__new_n", "__tok")
         )
     else:
         sorted_sh = F.array_sort("__shingles")
-        n = F.size("__shingles")
-        prefix_len = n - F.ceil(n * F.lit(t)).cast("int") + 1
+        pre = prefix_len(F.size("__shingles"), t)
         probe = new_base.select(
             F.col("__id").alias("new_id"),
             F.size("__shingles").alias("__new_n"),
-            F.explode(F.slice(sorted_sh, F.lit(1), prefix_len)).alias("__tok_s"),
+            F.explode(F.slice(sorted_sh, F.lit(1), pre)).alias("__tok_s"),
         ).select("new_id", "__new_n", F.xxhash64("__tok_s").alias("__tok"))
-    size_filter = F.col("__ex_n") >= F.col("__new_n") * F.lit(t)
+    # ε-relaxed like the prefix: the bounds are exact rationals that
+    # doubles can round past (25·0.28 > 7)
+    size_filter = F.col("__ex_n") >= F.col("__new_n") * F.lit(t) - F.lit(_EPS)
     if metric == "jaccard":
         # the symmetric length filter (t·|Sa| ≤ |Sb| ≤ |Sa|/t) is a
         # JACCARD necessity; containment keeps only the lower bound
         # (|Sb| ≥ |Sa∩Sb| ≥ t·|Sa|) — a containing doc may be any size
         size_filter = size_filter & (
-            F.col("__ex_n") <= F.col("__new_n") / F.lit(t)
+            F.col("__ex_n") <= F.col("__new_n") / F.lit(t) + F.lit(_EPS)
         )
     cand = (
         probe.join(inv_index, "__tok")
@@ -422,16 +434,11 @@ def prefix_filter_probe(
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     if metric == "containment":
         ratio = inter / F.greatest(F.size("sh_a"), F.lit(1))
-        return (
-            pairs.withColumn("containment", F.round(ratio, 6))
-            .filter(F.col("containment") >= threshold)
-            .select("new_id", "existing_id", "containment")
-        )
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "existing_id", "jaccard")
+    else:
+        ratio = inter / F.greatest(F.size("sh_a") + F.size("sh_b") - inter, F.lit(1))
+    # filter on the exact ratio, round only for display
+    return pairs.filter(ratio >= F.lit(t)).select(
+        "new_id", "existing_id", F.round(ratio, 6).alias(metric)
     )
 
 
@@ -747,13 +754,10 @@ def ngram_jaccard_pairs(
         # 64-bit collision only ADDS a candidate the exact verify drops
         tok_df = e.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
         w = Window.partitionBy("__id").orderBy("__df", "__tok")
-        prefix_len = (
-            F.col("__n") - F.ceil(F.col("__n") * F.lit(t)).cast("int") + 1
-        )
         probe = (
             e.join(tok_df, "__tok")
             .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= prefix_len)
+            .filter(F.col("__rn") <= prefix_len(F.col("__n"), t))
             .select(
                 F.col("__id").alias("id_a"), F.col("__n").alias("__na"), "__tok"
             )
@@ -766,7 +770,7 @@ def ngram_jaccard_pairs(
             probe.join(index, "__tok")
             .filter(
                 (F.col("id_a") < F.col("id_b"))
-                & (F.least(na, nb) >= F.lit(t) * F.greatest(na, nb) - F.lit(1e-9))
+                & (F.least(na, nb) >= F.lit(t) * F.greatest(na, nb) - F.lit(_EPS))
             )
             .select("id_a", "id_b")
             .dropDuplicates(["id_a", "id_b"])
@@ -785,9 +789,10 @@ def ngram_jaccard_pairs(
         )
         inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
         union = F.size("__sh_a") + F.size("__sh_b") - inter
-        j = F.round(inter / F.greatest(union, F.lit(1)), 6)
-        return pairs.select("id_a", "id_b", j.alias("jaccard")).filter(
-            F.col("jaccard") >= min_jaccard
+        j = inter / F.greatest(union, F.lit(1))
+        # filter on the exact ratio, round only for display
+        return pairs.filter(j >= F.lit(t)).select(
+            "id_a", "id_b", F.round(j, 6).alias("jaccard")
         )
     _guard_quadratic(df, max_rows, "ngram_jaccard_pairs")
     from pyspark import StorageLevel

@@ -21,12 +21,24 @@ shared generator, so the DuckDB oracle replays the key bit-for-bit.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators.localframe import local_df
 
 BITS = 16  # per-dimension fixed-point resolution
+
+_log = logging.getLogger(__name__)
+
+
+def _unlaid(table: str, exc: Exception, plain: DataFrame) -> DataFrame:
+    """The fallback of a failed layout write: record the table and the
+    failure, then serve ``plain`` — the same rows without the layout's
+    plan shape."""
+    _log.warning("layout %s not written, serving the plain plan: %r", table, exc)
+    return plain
 
 
 def _normalize(col: Column, lo: float, hi: float) -> Column:
@@ -317,8 +329,8 @@ def bucketed_fact(
                 .saveAsTable(name)
             )
         return spark.table(name)
-    except Exception:
-        return base
+    except Exception as e:
+        return _unlaid(name, e, base)
 
 
 def conformed_dim(spark, name: str, build, sig_key: str) -> DataFrame:
@@ -359,8 +371,8 @@ def conformed_dim(spark, name: str, build, sig_key: str) -> DataFrame:
                 "parquet"
             ).saveAsTable(tbl)
         return spark.table(tbl)
-    except Exception:
-        return build()
+    except Exception as e:
+        return _unlaid(tbl, e, build())
 
 
 def bucketed_fact_with_delta(
@@ -447,8 +459,8 @@ def bucketed_fact_with_delta(
                 shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
                 raise
         return spark.table(name)
-    except Exception:
-        return base.unionByName(delta_of(base))
+    except Exception as e:
+        return _unlaid(name, e, base.unionByName(delta_of(base)))
 
 
 def compact_parquet(

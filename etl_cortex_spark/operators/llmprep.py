@@ -1641,7 +1641,6 @@ def ccnet_perplexity_buckets(
             F.sum("__m").alias("n_trigrams"),
             F.sum("__s").alias("sum_lp_micro"),
         )
-        .orderBy("lang", "bucket")
     )
 
 
@@ -1759,5 +1758,4 @@ def lang_id_predict(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("__s").alias("sum_score_micro"),
         )
-        .orderBy("lang", "pred_lang")
     )

@@ -1,5 +1,5 @@
 """Small, driver-sized frames: JVM-local literals for driver-built
-model state, and the single-partition sort for bounded outputs.
+model state.
 
 ``spark.createDataFrame(python_rows, ...)`` takes the pickled-RDD path
 (``applySchemaToPythonRDD``): the rows are parallelized into
@@ -26,10 +26,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-#: the largest output a single-task local sort accepts: ~100 MB of
-#: rows, one task with headroom
-LOCAL_SORT_MAX_ROWS = 100_000
 
 #: above this the literal expression tree's planning cost outweighs
 #: the Python-worker savings; createDataFrame also keeps driver memory
@@ -60,32 +56,3 @@ def local_df(spark: SparkSession, rows: Sequence, schema: str | StructType) -> D
     ]
     return spark.range(1).select(F.inline(F.array(*structs)))
 
-
-def bounded_sort(df: DataFrame, *cols, max_rows: int) -> DataFrame:
-    """``df`` in one partition, sorted by ``cols``: the same total order
-    as ``df.orderBy(*cols)`` for an output of at most ``max_rows`` rows.
-
-    A global ``orderBy`` plans a range exchange, and the range
-    partitioner first runs a separate sampling job over the exchange's
-    child — re-executing a whole aggregate, HOF chain or decode. For an
-    output that fits one task with headroom the single-partition sort
-    skips that job. ``max_rows`` is the output bound the caller knows
-    from its own plan: a grouping key's domain (3 return flags,
-    5 priorities, 12 months), a ``k``, or a sample size. An output that
-    grows with the corpus has no such bound; it calls ``orderBy``.
-
-    ``repartition(1)`` rather than ``coalesce(1)``: coalesce has no
-    shuffle boundary, so it would also collapse the child's last stage
-    (an aggregate's merge tasks, a verify join, a scan) into the one
-    task. c23 at sf0.1 measured 1.34 s with ``orderBy``, 1.00 s with
-    ``coalesce(1)`` and 0.62 s with ``repartition(1)``.
-
-    Raises ``ValueError`` when ``max_rows`` exceeds
-    ``LOCAL_SORT_MAX_ROWS``: such an output keeps the distributed
-    ``orderBy``."""
-    if max_rows > LOCAL_SORT_MAX_ROWS:
-        raise ValueError(
-            f"bounded_sort: max_rows={max_rows} exceeds "
-            f"LOCAL_SORT_MAX_ROWS={LOCAL_SORT_MAX_ROWS}; use orderBy"
-        )
-    return df.repartition(1).sortWithinPartitions(*cols)

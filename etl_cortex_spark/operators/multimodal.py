@@ -125,69 +125,6 @@ def decode_image(payload: bytes) -> "object":
     )
 
 
-def resize_images(assets: DataFrame, max_side: int = 256) -> DataFrame:
-    """Image resize over binary payloads — the Spark plumbing is real
-    (Arrow batches through ``mapInPandas``, fixed output schema, bytes
-    never touch the driver); the pixel kernel is a deterministic stub
-    because no codec ships in this container. A production build swaps
-    ``_resize_stub`` for a Pillow/libvips call — nothing else changes.
-
-    Scale note: payload rows are large, so the op preserves the input
-    partitioning (no shuffle) and emits scaled dimensions + payload
-    untouched; re-encoding happens where the decoder does.
-    """
-    out_schema = "asset_id bigint, payload binary, width int, height int"
-
-    def _resize_stub(w: int, h: int) -> tuple[int, int]:
-        scale = max(w, h) / max_side
-        return (max(int(w / scale), 1), max(int(h / scale), 1)) if scale > 1 else (w, h)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            dims = [_resize_stub(m["width"], m["height"]) for m in pdf["meta"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": pdf["payload"],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                }
-            )
-
-    return assets.mapInPandas(batches, schema=out_schema)
-
-
-def sample_frames(assets: DataFrame, every_n_bytes: int = 32) -> DataFrame:
-    """Frame sampling for video payloads: one output row per sampled
-    'frame' (stub: every ``every_n_bytes``-th byte offset), exploded
-    executor-side via ``mapInPandas`` — the 1→N row fan-out shape a
-    real ffmpeg-based sampler uses, with per-frame byte slices standing
-    in for decoded frames."""
-    out_schema = "asset_id bigint, frame_no int, offset bigint, frame_crc string"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in it:
-            rows = {"asset_id": [], "frame_no": [], "offset": [], "frame_crc": []}
-            for aid, payload, meta in zip(
-                pdf["asset_id"], pdf["payload"], pdf["meta"]
-            ):
-                if meta["modality"] != "video":
-                    continue
-                buf = bytes(payload)
-                for i, off in enumerate(range(0, len(buf), every_n_bytes)):
-                    rows["asset_id"].append(aid)
-                    rows["frame_no"].append(i)
-                    rows["offset"].append(off)
-                    rows["frame_crc"].append(
-                        hashlib.md5(buf[off : off + every_n_bytes]).hexdigest()
-                    )
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(batches, schema=out_schema)
-
-
 def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
     ``mapInPandas`` — per-partition, zero driver involvement. The

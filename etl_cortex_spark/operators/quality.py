@@ -24,8 +24,8 @@ def check_rules(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
     """Evaluate named boolean rules (True = row passes) in one
     aggregate pass; NULL rule results count as violations (3VL-safe).
 
-    Returns (rule, n_rows, n_violations, violation_frac) sorted by
-    rule name.
+    Returns (rule, n_rows, n_violations, violation_frac), one row per
+    rule.
     """
     if not rules:
         raise ValueError("check_rules needs at least one rule")
@@ -47,7 +47,6 @@ def check_rules(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
             "n_violations",
             F.round(F.col("n_violations") / F.col("__rows"), 6).alias("violation_frac"),
         )
-        .orderBy("rule")
     )
 
 
@@ -94,7 +93,7 @@ def referential_integrity(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    return out.orderBy("relation")
+    return out
 
 
 def observe_metrics(df: DataFrame, name: str, metrics: dict[str, Column]):

@@ -207,7 +207,6 @@ def tfidf_knn(
     return (
         scored.withColumn("rank", rank)
         .filter(F.col("rank") <= k)
-        .orderBy(id_col, "rank")
     )
 
 

@@ -27,7 +27,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_cortex_spark.operators.localframe import bounded_sort, local_df
+from etl_cortex_spark.operators.localframe import local_df
 
 
 def as_double(vec: Column | str) -> Column:
@@ -911,5 +911,4 @@ def matryoshka_recall_audit(
             "hits",
             (F.col("hits").cast("double") / F.lit(denom)).alias("recall_at_k"),
         )
-        .transform(bounded_sort, "m", max_rows=len(dims))
     )

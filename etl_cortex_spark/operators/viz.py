@@ -34,7 +34,6 @@ def histogram(
         )
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias(count_name))
-        .orderBy("bin")
     )
 
 
@@ -51,7 +50,6 @@ def time_series(
     return (
         df.groupBy(F.date_trunc(grain, F.col(ts_col)).alias(grain))
         .agg(*aggs)
-        .orderBy(grain)
     )
 
 

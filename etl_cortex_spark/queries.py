@@ -22,7 +22,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_cortex_spark.operators.localframe import bounded_sort
 from etl_cortex_spark.sources.tables import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -111,7 +110,6 @@ def flagship_events_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("__m.value"), 2).alias("total_value"),
             F.round(F.avg("__m.prop_k"), 2).alias("avg_k"),
         )
-        .transform(bounded_sort, F.desc("qtd"), "event_type", max_rows=5)
     )
 
 

@@ -363,8 +363,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tier", "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    out = run_to_memory(agg, "complete")
-    return out.orderBy("tier", "event_type")
+    return run_to_memory(agg, "complete")
 
 
 def attribution_join(
@@ -439,10 +438,9 @@ def stream_stream_attribution(
     oracle-checkable.
     """
     clicks, purchases = _attribution_sides(spark, sf_dir)
-    out = run_to_memory(
+    return run_to_memory(
         attribution_join(clicks, purchases, window_minutes, "inner"), "append"
     )
-    return out.orderBy("user_id", "click_id", "purchase_id")
 
 
 def stream_stream_attribution_outer(
@@ -469,10 +467,9 @@ def stream_stream_attribution_outer(
     tests/test_streaming_latedata.py on a controlled staggered feed.)
     """
     clicks, purchases = _attribution_sides(spark, sf_dir)
-    out = run_to_memory(
+    return run_to_memory(
         attribution_join(clicks, purchases, window_minutes, "leftOuter"), "append"
     )
-    return out.orderBy("user_id", "click_id", "purchase_id")
 
 
 def stream_stream_attribution_full(
@@ -509,4 +506,4 @@ def stream_stream_attribution_full(
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
     out = run_to_memory(joined, "append")
-    return out.orderBy("user_id", "click_id", "purchase_id")
+    return out

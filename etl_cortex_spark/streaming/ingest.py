@@ -1,93 +1,15 @@
-"""Incremental medallion ingest (the streaming counterpart of
-pipeline.run_pipeline).
+"""Streaming ingest sinks: ``foreachBatch`` commit protocols.
 
-The reference recomputes everything from scratch on every interaction
-(Streamlit rerun, ``/root/reference/app.py:313-374``). The Spark-first
-incremental story: a file-watch stream picks up NEW exports only,
-applies the same silver cleaning (one shared code path — the batch and
-streaming silver cannot drift), and appends to a parquet silver table
-with exactly-once bookkeeping via the checkpoint.
-
-Scale notes: each microbatch touches only new files; the parquet sink
-appends partitioned files without rewriting history; recovery is free
-(restart resumes from the checkpoint's file log). Gold (dedup
-keep-latest) stays a batch view over silver — a global argmax per key
-is not incrementally expressible without a mutable store, and a
-periodic batch rebuild over partitioned silver is the honest,
-restart-safe answer (at 100 TB: an incremental MERGE into a lakehouse
-table; same plan shape).
+Structured Streaming has no native writer for a keyed upsert table, a
+sketch, an index or a manifest snapshot. Each sink here runs a BATCH
+plan per micro-batch and commits it exactly once: a bounded guard
+state skips replayed batch ids, immutable version directories and an
+atomic pointer flip keep readers on complete tables.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-from etl_cortex_spark.operators.localframe import local_df
-from etl_cortex_spark.pipeline import silver_clean
-
-
-def incremental_silver(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    schema: StructType | str,
-):
-    """Start (and return) the streaming query: CSV drops in ``in_dir``
-    → silver_clean → append-only parquet at ``out_dir``.
-
-    ``availableNow`` trigger: drains everything currently present then
-    stops — the batch-friendly way to run an incremental pipeline on a
-    schedule; swap for ``processingTime`` to run continuously.
-    """
-    raw = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        # verify header names against the schema instead of binding
-        # positionally — a reordered drop file must fail loudly, not
-        # silently swap columns (same rule as union_all's by-name union)
-        .option("enforceSchema", False)
-        .csv(in_dir)
-    )
-    cleaned = silver_clean(raw)
-    return (
-        cleaned.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def drain(query) -> None:
-    """Block until an availableNow query finishes its drain."""
-    query.awaitTermination()
-
-
-def silver_table(
-    spark: SparkSession,
-    out_dir: str,
-    schema: StructType | str | None = None,
-) -> DataFrame:
-    """The accumulated silver table.
-
-    Before the first batch commits there is nothing to read; when the
-    caller passes the ingest ``schema``, the fallback is an empty frame
-    with the REAL post-clean silver schema (derived by running
-    ``silver_clean`` over an empty input — same code path, so it cannot
-    drift). Existence is probed by attempting the read, which works on
-    any Hadoop filesystem (S3/HDFS), not just the driver's local disk.
-    """
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        return spark.read.parquet(out_dir)
-    except AnalysisException:
-        if schema is not None:
-            return silver_clean(local_df(spark, [], schema))
-        raise
 
 
 def foreach_batch_upsert(

@@ -12,7 +12,9 @@ that are easiest to get subtly wrong:
 - Bloom membership's zero-false-negative contract on arbitrary strings
   (the d91 decontamination guarantee),
 - salted_agg vs the plain aggregate on arbitrary key skew (the
-  semantics-preservation claim of the scale tier).
+  semantics-preservation claim of the scale tier),
+- the dedup prefix filters' boundary: a pair whose jaccard equals the
+  threshold exactly is never lost.
 
 Each example evaluates in one small Spark job; max_examples is kept low
 because a Spark round-trip costs ~0.3 s (deadline disabled for the same
@@ -23,7 +25,7 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -262,3 +264,26 @@ def test_snapshot_protocol_matches_model(spark, tmp_path_factory, ops):
             (r.k, r.tag) for r in snapshot_read(spark, path, version=v).collect()
         )
         assert got == expect, (v, got, expect)
+
+
+@SLOW
+@given(st.integers(2, 40).flatmap(lambda n: st.tuples(st.just(n), st.integers(1, n))))
+@example((25, 7))  # 25 * 0.28 == 7.000000000000001 in doubles
+def test_prefix_filters_keep_pairs_at_exactly_the_threshold(spark, nm):
+    """Doc A has n distinct word 3-grams and doc B is A's last m + 2
+    words, so B's m grams are A's last m and jaccard(A, B) = m/n = t
+    exactly. A is the probe side of both prefix filters, and its shared
+    grams sort LAST in either token order (highest df, and the zero-
+    padded words sort positionally): a prefix one token short misses
+    every shared gram and loses the pair."""
+    from etl_cortex_spark.operators.dedup import ngram_jaccard_pairs, prefix_filter_probe
+
+    n, m = nm
+    t = m / n
+    words = [f"w{i:03d}" for i in range(n + 2)]
+    a = spark.createDataFrame([(1, " ".join(words))], "doc_id long, text string")
+    b = spark.createDataFrame([(2, " ".join(words[-(m + 2):]))], "doc_id long, text string")
+    pairs = ngram_jaccard_pairs(a.unionByName(b), min_jaccard=t, persist=False)
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(1, 2)], (n, m)
+    probe = prefix_filter_probe(existing=b, new=a, threshold=t)
+    assert [(r.new_id, r.existing_id) for r in probe.collect()] == [(1, 2)], (n, m)

@@ -1,93 +1,6 @@
-"""Incremental silver ingest: new files only, exactly-once, batch parity."""
+"""Incremental aggregate maintenance: retraction inverts the merge."""
 
 from __future__ import annotations
-
-import pandas as pd
-import pytest
-
-from etl_cortex_spark.operators.gold import dedup_latest
-from etl_cortex_spark.streaming.ingest import drain, incremental_silver, silver_table
-
-SCHEMA = (
-    "endpoint_name string, endpoint_status string, ip_address string, "
-    "last_seen string"
-)
-
-
-def _write_csv(path, rows):
-    pd.DataFrame(
-        rows,
-        columns=["endpoint_name", "endpoint_status", "ip_address", "last_seen"],
-    ).to_csv(path, index=False)
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    (tmp_path / "in").mkdir()
-    return (
-        str(tmp_path / "in"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-
-
-def test_incremental_silver_accumulates_and_dedups(spark, dirs):
-    in_dir, out_dir, ckpt = dirs
-
-    _write_csv(
-        f"{in_dir}/batch1.csv",
-        [
-            ["host-a", " connected ", "10.0.0.5, junk", "2024-01-10 12:00:00"],
-            ["host-b", "LOST", "no ip", "2024-01-05 09:30:00"],
-        ],
-    )
-    drain(incremental_silver(spark, in_dir, out_dir, ckpt, SCHEMA))
-    first = silver_table(spark, out_dir)
-    assert first.count() == 2
-
-    # second drop: only the NEW file is processed (checkpoint file log)
-    _write_csv(
-        f"{in_dir}/batch2.csv",
-        [["host-a", "connected", "172.16.0.9", "2024-02-01 10:00:00"]],
-    )
-    drain(incremental_silver(spark, in_dir, out_dir, ckpt, SCHEMA))
-    silver = silver_table(spark, out_dir)
-    assert silver.count() == 3  # appended, not reprocessed (else 5)
-
-    # silver carries the same derivations as the batch path
-    row = silver.filter("endpoint_name = 'host-b'").first()
-    assert row.endpoint_status == "Lost"
-    assert row.ipv4 is None
-    assert str(row.last_seen) == "2024-01-05 09:30:00"
-
-    # gold stays a batch view over silver: keep-most-recent per key
-    gold = dedup_latest(silver, keys=("endpoint_name",), recency_cols=("last_seen",))
-    a = gold.filter("endpoint_name = 'host-a'").first()
-    assert a.ipv4 == "172.16.0.9"
-    assert gold.count() == 2
-
-
-def test_restart_is_exactly_once(spark, dirs):
-    in_dir, out_dir, ckpt = dirs
-    _write_csv(
-        f"{in_dir}/only.csv",
-        [["host-x", "Connected", "1.2.3.4", "2024-03-01 00:00:00"]],
-    )
-    drain(incremental_silver(spark, in_dir, out_dir, ckpt, SCHEMA))
-    # rerunning with the same checkpoint must be a no-op
-    drain(incremental_silver(spark, in_dir, out_dir, ckpt, SCHEMA))
-    assert silver_table(spark, out_dir).count() == 1
-
-def test_silver_table_empty_fallback_has_real_schema(spark, dirs):
-    from etl_cortex_spark.streaming.ingest import silver_table
-
-    _, out_dir, _ = dirs
-    empty = silver_table(spark, out_dir, schema=SCHEMA)
-    assert empty.count() == 0
-    # post-clean schema: derivations present, so downstream gold code
-    # (dedup on last_seen, ipv4 selection) analyzes fine pre-first-batch
-    assert "ipv4" in empty.columns and "last_seen" in empty.columns
-    assert dict(empty.dtypes)["last_seen"] == "timestamp"
 
 
 def test_retract_agg_inverts_merge_and_drops_empty_groups(spark):

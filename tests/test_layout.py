@@ -224,6 +224,25 @@ def test_delta_append_failure_never_leaves_partial_table(spark):
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+def test_layout_fallback_is_logged(spark, monkeypatch, caplog):
+    """A failed layout write still serves the plain plan, and the
+    fallback leaves a warning naming the table and the exception."""
+    import logging
+
+    from etl_cortex_spark.operators.layout import conformed_dim
+
+    def boom(name, *a, **k):
+        raise RuntimeError("catalog unavailable")
+
+    monkeypatch.setattr(spark.catalog, "tableExists", boom)
+    with caplog.at_level(logging.WARNING, logger="etl_cortex_spark.operators.layout"):
+        out = conformed_dim(spark, "probe", lambda: spark.range(3), "sig")
+    assert out.columns == ["id"]
+    (rec,) = caplog.records
+    assert "dimf_probe_" in rec.getMessage()
+    assert "catalog unavailable" in rec.getMessage()
+
+
 # --- manifest snapshots / time travel (round 13) --------------------------------
 
 
