@@ -200,6 +200,15 @@ _REVERIFY_NOW.update(dict.fromkeys("""
     tpch_q8_market_share tpch_q9_product_type_profit
 """.split(), 21))
 
+# Round 22: the MinHash-LSH verify step filters on the exact jaccard
+# (minhash_lsh_pairs, minhash_lsh_probe and the entries built on them,
+# plus d02_incremental_lsh_probe's oracle), and stream_cms_sketch's
+# builder has its own name.
+_REVERIFY_NOW.update(dict.fromkeys("""
+    d02_incremental_lsh_probe d02_lsh_recall_audit
+    d02_minhash_lsh_pairs d02_near_dedup_minhash stream_cms_sketch
+""".split(), 22))
+
 
 def _last_recorded_round() -> dict[str, int]:
     """name → highest round with an official CORRECTNESS row for it."""

@@ -2349,8 +2349,8 @@ def d02pp(spark: SparkSession, sf_dir: str) -> DataFrame:
                  greatest(len(ne.sh) + len(ex.sh) - len(list_intersect(ne.sh, ex.sh)), 1), 6)
              AS jaccard
     FROM ne, ex
-    WHERE round(len(list_intersect(ne.sh, ex.sh)) /
-                greatest(len(ne.sh) + len(ex.sh) - len(list_intersect(ne.sh, ex.sh)), 1), 6)
+    WHERE len(list_intersect(ne.sh, ex.sh)) /
+            greatest(len(ne.sh) + len(ex.sh) - len(list_intersect(ne.sh, ex.sh)), 1)
           >= 0.5
     ORDER BY new_id, existing_id
     """,
@@ -2395,7 +2395,7 @@ def d02g(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id ORDER BY user_id
     """,
 )
-def d08e(spark: SparkSession, sf_dir: str) -> DataFrame:
+def d08cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D8 state-side pattern: an always-on Count-Min frequency monitor
     maintained by ``foreachBatch`` (`streaming/ingest.foreach_batch_cms`)
     — each micro-batch's sketch merges into the stored ≤ depth·width-row

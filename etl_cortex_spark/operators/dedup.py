@@ -31,7 +31,6 @@ wrap).
 from __future__ import annotations
 
 import random
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -166,10 +165,10 @@ def minhash_lsh_pairs(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    j = inter / F.greatest(union, F.lit(1))
+    # filter on the exact ratio, round only for display
+    return pairs.filter(j >= F.lit(threshold)).select(
+        "id_a", "id_b", F.round(j, 6).alias("jaccard")
     )
 
 
@@ -232,10 +231,10 @@ def minhash_lsh_probe(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.withColumn("jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "existing_id", "jaccard")
+    j = inter / F.greatest(union, F.lit(1))
+    # filter on the exact ratio, round only for display
+    return pairs.filter(j >= F.lit(threshold)).select(
+        "new_id", "existing_id", F.round(j, 6).alias("jaccard")
     )
 
 

@@ -21,11 +21,26 @@ one you would also set on a real cluster:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+#: ``spark.sql.codegen.cache.maxEntries``: generated classes the JVM keeps
+#: compiled. Spark's default, 100, is below one warehouse refresh's working
+#: set (perfbench ``warehouse_sql``, 4 cores): after warm-up the 9-query
+#: refresh compiles 96 classes (flagship 13, c17 8, q3 15, q5 17, c10 6,
+#: c26 6, c32 8, a13 14, d01 9), its first refresh 142-147, and the oracle
+#: checks add more. An LRU cache a little smaller than a cyclic working set
+#: misses on every access, so each refresh recompiled all 96. The cache is
+#: a Guava cache at its default concurrency of 4, which bounds each of its
+#: 4 segments at a quarter of the total, so a segment evicts before the
+#: total reaches the bound. At 1000 a repeated refresh compiles none.
+CODEGEN_CACHE_ENTRIES = 1000
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -39,6 +54,15 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for the test
     harness; pass an explicit master (or set one in spark-submit) for
     cluster runs — the conf below is cluster-safe.
+
+    The codegen cache holds ``CODEGEN_CACHE_ENTRIES`` generated classes
+    instead of Spark's 100, so a repeated warehouse refresh compiles
+    none (the comment on the constant has the class counts). The size
+    is a static conf, which the JVM's code generator reads once, at its
+    first compile: a session built elsewhere (the driver's own for
+    ``__spark_entry__``) keeps the default, since ``load_table`` can
+    set only runtime confs. Such a session recompiles repeated plans,
+    which costs time, not correctness.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     cpus = int(DEFAULT_CPUS) if DEFAULT_CPUS.isdigit() else 32
@@ -72,6 +96,7 @@ def get_spark(
         # F.broadcast hints in the query builders; AQE upgrades the rest
         # at runtime from observed, not estimated, sizes.
         .config("spark.sql.autoBroadcastJoinThreshold", "10MB")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
@@ -112,7 +137,8 @@ def ensure_package_shipped(spark: SparkSession) -> None:
 
     try:
         app = spark.sparkContext.applicationId
-    except Exception:
+    except Exception as e:
+        _log.warning("package not shipped to Python workers, no application id: %r", e)
         return
     if app in _SHIPPED_APPS:
         return
@@ -136,6 +162,7 @@ def ensure_package_shipped(spark: SparkSession) -> None:
         os.replace(tmp, zpath)  # atomic vs concurrent builders
     try:
         spark.sparkContext.addPyFile(zpath)
-    except Exception:
-        pass  # already added under this name in this app: same content
+    except Exception as e:
+        # already added under this name in this app: same content
+        _log.warning("package zip %s not added to app %s: %r", zpath, app, e)
     _SHIPPED_APPS.add(app)

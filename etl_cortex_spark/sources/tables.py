@@ -13,6 +13,7 @@ parquet; the API is identical — only the paths change.
 
 from __future__ import annotations
 
+import logging
 import os
 from functools import lru_cache
 
@@ -37,6 +38,8 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_log = logging.getLogger(__name__)
 
 
 @lru_cache(maxsize=256)
@@ -68,7 +71,12 @@ def _nanos_ts_cols(path: str) -> tuple[str, ...]:
             for fld in schema
             if pa.types.is_timestamp(fld.type) and fld.type.unit == "ns"
         )
-    except Exception:
+    except Exception as e:
+        _log.warning(
+            "parquet footer of %s not read, nanosecond timestamps load as longs: %r",
+            path,
+            e,
+        )
         return ()
 
 
@@ -104,7 +112,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     try:
         app = spark.sparkContext.applicationId
         key = (app, os.path.abspath(path), os.stat(path).st_mtime_ns)
-    except Exception:
+    except Exception as e:
+        _log.warning("table %s not memoized, its scan is rebuilt per call: %r", path, e)
         key = None
     if key is not None and key in _DF_CACHE:
         return _DF_CACHE[key]

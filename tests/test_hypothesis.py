@@ -287,3 +287,21 @@ def test_prefix_filters_keep_pairs_at_exactly_the_threshold(spark, nm):
     assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(1, 2)], (n, m)
     probe = prefix_filter_probe(existing=b, new=a, threshold=t)
     assert [(r.new_id, r.existing_id) for r in probe.collect()] == [(1, 2)], (n, m)
+
+
+def test_lsh_verify_drops_pairs_just_below_the_threshold(spark):
+    """Doc A has 3 word 3-grams and doc B 2 of them, so jaccard(A, B) is
+    2/3, which rounds to 0.666667. One minhash per band makes the pair a
+    candidate (the 0.5 run finds it); at threshold 0.666667 the exact
+    ratio is below the threshold and the verify step drops the pair."""
+    from etl_cortex_spark.operators.dedup import minhash_lsh_pairs, minhash_lsh_probe
+
+    words = [f"w{i:03d}" for i in range(5)]
+    a = spark.createDataFrame([(1, " ".join(words))], "doc_id long, text string")
+    b = spark.createDataFrame([(2, " ".join(words[1:]))], "doc_id long, text string")
+    lsh = {"num_hashes": 32, "bands": 32}
+    for t, want in ((0.5, [(1, 2, 0.666667)]), (0.666667, [])):
+        pairs = minhash_lsh_pairs(a.unionByName(b), threshold=t, persist=False, **lsh)
+        assert [tuple(r) for r in pairs.collect()] == want, t
+        probe = minhash_lsh_probe(existing=b, new=a, threshold=t, **lsh)
+        assert [tuple(r) for r in probe.collect()] == want, t

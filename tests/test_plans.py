@@ -995,3 +995,22 @@ def test_no_inline_single_partition_sort_outside_bounded_sort():
     hits = {k: v for k, v in hits.items() if v}
     assert hits == {}, hits
 
+
+def test_inventory_builders_have_unique_names():
+    """Source guard: no inventory module defines a top-level function
+    twice. The registry keeps both builders through ``@query``, but the
+    module attribute and tracebacks name only the later one."""
+    import ast
+    import collections
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "etl_cortex_spark" / "inventory"
+    dups = {}
+    for p in sorted(root.glob("*.py")):
+        names = collections.Counter(
+            node.name
+            for node in ast.parse(p.read_text()).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        )
+        dups.update({f"{p.name}:{n}": c for n, c in names.items() if c > 1})
+    assert dups == {}, dups

@@ -348,3 +348,19 @@ def test_merge_mor_batch_id_replay_is_ledger_noop(spark, tmp_path):
     snapshot_expire(spark, path, keep_last=1, orphan_grace_secs=0.0)
     assert snapshot_merge_mor(spark, batch, path, "k", batch_id=7) == v
     assert snapshot_read(spark, path).count() == 17
+
+
+def test_unreadable_footer_is_logged(tmp_path, caplog):
+    """A footer that does not parse converts no column, and the
+    fallback leaves a warning naming the file and the exception."""
+    import logging
+
+    from etl_cortex_spark.sources.tables import _nanos_ts_cols
+
+    bad = tmp_path / "events.parquet"
+    bad.write_bytes(b"not a parquet file")
+    with caplog.at_level(logging.WARNING, logger="etl_cortex_spark.sources.tables"):
+        assert _nanos_ts_cols(str(bad)) == ()
+    (rec,) = caplog.records
+    assert str(bad) in rec.getMessage()
+    assert "ArrowInvalid" in rec.getMessage()
