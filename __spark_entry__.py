@@ -209,6 +209,19 @@ _REVERIFY_NOW.update(dict.fromkeys("""
     d02_minhash_lsh_pairs d02_near_dedup_minhash stream_cms_sketch
 """.split(), 22))
 
+# Round 23: the entries whose scratch data changed place. The two pairs
+# that shared one path, the DPP entry that no longer reuses its layout,
+# file skipping keyed on the full data path, and the six sinks whose
+# output now lives under the writing process's pid.
+_REVERIFY_NOW.update(dict.fromkeys("""
+    scale_snapshot_partition_evolution scale_snapshot_schema_evolution
+    d25_semantic_dedup_probe d25_semantic_probe_recall
+    scale_dynamic_partition_pruning scale_file_skipping
+    sink_parquet_partitioned_roundtrip sink_csv_roundtrip
+    sink_orc_roundtrip sink_json_roundtrip sink_text_gzip_roundtrip
+    sink_xml_roundtrip
+""".split(), 23))
+
 
 def _last_recorded_round() -> dict[str, int]:
     """name → highest round with an official CORRECTNESS row for it."""

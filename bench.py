@@ -225,26 +225,6 @@ def run_interleaved(
     return best_s, (best_d if sql is not None else None)
 
 
-def duckdb_timings(names: list[str], sf_dir: str, runs: int = RUNS) -> dict[str, float]:
-    """Best-of-N DuckDB wall clock per paired oracle (kept for tools/
-    one-off probes; the official bench path is ``run_interleaved``)."""
-    con = duck_connect(sf_dir)
-    if con is None:
-        return {}
-    out: dict[str, float] = {}
-    for name in names:
-        sql = ORACLE.get(name)
-        if sql is None:
-            continue
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 4)
-    return out
-
-
 #: Bench-session sizing for the measured scale factor. AQE stays the
 #: engine default (session.py) because at cluster scale runtime
 #: re-planning is non-negotiable; at a KNOWN-tiny SF (~10 MB inputs)

@@ -44,8 +44,8 @@ from etl_cortex_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SRC_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF1_DIR = os.environ.get("SPARK_GRAFT_SLOPE_DIR", "/tmp/spark_graft_sf1")
-#: replication factor for the throwaway big-SF dir; the round-9 sf10
-#: probe (tools/sf10_probe.py) sets 100 for a third slope decade.
+#: replication factor for the throwaway big-SF dir; 100 gives a third
+#: slope decade (~sf10).
 COPIES = int(os.environ.get("SPARK_GRAFT_SLOPE_COPIES", "10"))
 
 #: per-copy key offsets — disjoint id spaces per copy, join keys moved

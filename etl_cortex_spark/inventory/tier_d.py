@@ -19,6 +19,7 @@ from etl_cortex_spark.operators import multimodal as MM
 from etl_cortex_spark.operators import similarity as SIM
 from etl_cortex_spark.operators import textops as TX
 from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.layout import scratch_dir
 from etl_cortex_spark.queries import T, query
 
 # shared oracle SQL fragments (DuckDB): whitespace words + k-shingles,
@@ -632,12 +633,7 @@ def d03d(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory and ADC-scoring its codes against the per-query LUT.
     Partition pruning + recall are pinned in tests/test_pq.py and
     tests/test_plans.py; this entry pins the VALUES end-to-end against
-    the SQL replay. Index path carries the pid so concurrent harness
-    runs never collide (round-4 advice on d08d)."""
-    import hashlib
-    import os
-    import tempfile
-
+    the SQL replay."""
     from etl_cortex_spark.operators.pq import (
         deterministic_codebooks,
         ivfpq_adc_topk,
@@ -647,10 +643,7 @@ def d03d(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings")
     books = deterministic_codebooks(emb, m=4, k=8)
     qv = _query_vec(spark, sf_dir)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ivfpq_{tag}_{os.getpid()}"
-    )
+    path = scratch_dir(sf_dir, "d03_ann_ivfpq_topk")
     write_ivfpq_index(emb.filter(F.col("vec_id") != 0), path, books)
     return ivfpq_adc_topk(spark, path, books, qv, topk=10)
 
@@ -691,15 +684,8 @@ def d03inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of an O(corpus) re-shuffle; file accumulation is
     `layout.compact_parquet`'s job like any bucketed fact
     (`similarity.py:append_ivf_index`)."""
-    import hashlib
-    import os
-    import tempfile
-
     emb = T(spark, sf_dir, "embeddings")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ivfinc_{tag}_{os.getpid()}"
-    )
+    path = scratch_dir(sf_dir, "d03_ivf_incremental")
     corpus = emb.filter(F.col("vec_id") != 0)
     SIM.write_ivf_index(corpus.filter(F.col("vec_id") % 7 != 3), path)
     SIM.append_ivf_index(corpus.filter(F.col("vec_id") % 7 == 3), path)
@@ -746,17 +732,12 @@ def d03stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k hash and the piggybacked n_indexed count breaks on ANY cell
     losing or doubling rows, independent of where the engine cut the
     batches."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.streaming.events import read_table_stream
     from etl_cortex_spark.streaming.ingest import foreach_batch_ivf
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_ivfstream", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_ivf_ingest")
     emb = read_table_stream(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") != 0
     )
@@ -2127,10 +2108,7 @@ def d08d(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-latest argmax — the oracle. The multi-micro-batch ordering
     and crash-replay idempotence are pinned separately in
     tests/test_streaming_latedata.py."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.streaming.events import read_events_stream
     from etl_cortex_spark.streaming.ingest import (
@@ -2138,13 +2116,8 @@ def d08d(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_upsert_table,
     )
 
-    # pid in the path (round-4 advice): two concurrent harness runs
-    # over the same sf_dir must not delete each other's in-flight
-    # upsert table/checkpoint
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_upsert", h)
-    # fresh run each call: the checkpoint identifies the source batches
-    shutil.rmtree(base, ignore_errors=True)
+    # a fresh directory each call: the checkpoint identifies the source batches
+    base = scratch_dir(sf_dir, "stream_foreach_batch_upsert")
     ev = read_events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "value"
     )
@@ -2185,18 +2158,13 @@ def d08e(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the streaming-writes-while-training-reads posture of a
     100 TB corpus store: ingest keeps committing versions while any
     reader stays pinned to the snapshot it resolved."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import snapshot_read
     from etl_cortex_spark.streaming.events import read_events_stream
     from etl_cortex_spark.streaming.ingest import foreach_batch_snapshot
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_snapstream", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_snapshot_ingest")
     ev = read_events_stream(spark, sf_dir).select("user_id", "event_id", "value")
     q = foreach_batch_snapshot(
         ev,
@@ -2242,10 +2210,7 @@ def d08wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_ts.py. At 100 TB this is the quality gate
     running INSIDE ingest instead of as mop-up deletes after bad data
     already served readers."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import snapshot_read
     from etl_cortex_spark.streaming.events import read_events_stream
@@ -2254,9 +2219,7 @@ def d08wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         wap_commit_batch,
     )
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_snapwap", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_snapshot_wap")
     table = os.path.join(base, "table")
 
     def audit(staged: DataFrame) -> bool:
@@ -2405,10 +2368,7 @@ def d08cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     epsilon contract transfers verbatim: per probe key the estimate
     never undercounts and lands within eps·N — flags the oracle pins
     true against exact counts it computes itself."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.sketch import cms_estimate, cms_params
     from etl_cortex_spark.streaming.events import read_events_stream
@@ -2419,9 +2379,7 @@ def d08cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     eps, delta = 5e-4, 1e-2
     width, depth = cms_params(eps, delta)
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_cms", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_cms_sketch")
     ev = read_events_stream(spark, sf_dir).select("user_id")
     q = foreach_batch_cms(
         ev,
@@ -2475,10 +2433,7 @@ def d08h(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streamed sketch's estimate lands within 5% (lg_k=12 ⇒ σ≈1.6%,
     5% is >3σ); the oracle pins the flag. Driver-side state: none —
     the comparison is one broadcast of a 1-row sketch."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.streaming.events import read_events_stream
     from etl_cortex_spark.streaming.ingest import (
@@ -2486,9 +2441,7 @@ def d08h(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_upsert_table,
     )
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_hll", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_hll_distinct")
     ev = read_events_stream(spark, sf_dir).select("user_id")
     q = foreach_batch_hll(
         ev,
@@ -2540,10 +2493,7 @@ def d08k(spark: SparkSession, sf_dir: str) -> DataFrame:
     discrete median in SQL — no epsilon gate. The emitted p50 is an
     actual data point (bit-portable double); sample_size pins that the
     drained state is the full k."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.sketch import bottomk_quantile
     from etl_cortex_spark.streaming.events import read_events_stream
@@ -2552,9 +2502,7 @@ def d08k(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_upsert_table,
     )
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_kmv", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_kmv_quantile")
     ev = read_events_stream(spark, sf_dir).select("event_id", "value")
     q = foreach_batch_kmv(
         ev,
@@ -2778,10 +2726,7 @@ def d08f(spark: SparkSession, sf_dir: str) -> DataFrame:
     rare. This is the seen-set of a 100 TB ingest (first-seen
     detection, dedup gating, decontamination): constant state, O(1)
     probes, no join."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.sketch import bloom_might_contain
     from etl_cortex_spark.streaming.events import read_events_stream
@@ -2790,9 +2735,7 @@ def d08f(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_upsert_table,
     )
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_bloomstream", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_bloom_membership")
     ev = read_events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("uid")
     )
@@ -3146,18 +3089,13 @@ def d08up(spark: SparkSession, sf_dir: str) -> DataFrame:
     end state as plain SQL over events; the two MOR delete families'
     maintenance story (compact applies and clears) is pinned in
     tests/test_layout.py."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import snapshot_append, snapshot_read
     from etl_cortex_spark.streaming.events import read_events_stream
     from etl_cortex_spark.streaming.ingest import foreach_batch_merge_mor
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_morup", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_snapshot_upsert")
     path = os.path.join(base, "table")
     ev_batch = T(spark, sf_dir, "events")
     seeds = (
@@ -3277,10 +3215,7 @@ def d08tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     version history: the plain batch aggregate is the oracle, and a
     hash match proves no row was lost, doubled, or delivered twice
     across the replay."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -3289,15 +3224,10 @@ def d08tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = T(spark, sf_dir, "events").select("user_id", "event_id", "value")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_tail_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_snapshot_tail")
     src = os.path.join(base, "src")
     dst = os.path.join(base, "dst")
     state = os.path.join(base, "cursor.json")
-    os.makedirs(base)
     snapshot_append(spark, ev.filter(F.col("event_id") % 3 == 0), src)
     snapshot_append(spark, ev.filter(F.col("event_id") % 3 == 1), src)
     # pull 1: versions (0, 2]
@@ -3352,10 +3282,7 @@ def d08tailmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature-store refresh loop: the fact table is scanned once at
     seed time and never again; every refresh after that reads deltas
     sized by what actually changed."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -3371,12 +3298,7 @@ def d08tailmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         (F.col("user_id") % 10).cast("bigint").alias("grp"),
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_tailmv_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = scratch_dir(sf_dir, "stream_snapshot_tail_mv")
     path = os.path.join(base, "tbl")
     state = os.path.join(base, "cursor.json")
     # v1: the seed generation
@@ -3433,10 +3355,7 @@ def d08tailacross(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the plain batch aggregate over everything, so the
     hash match proves no row was lost, doubled, or re-delivered
     across the rewrite."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -3446,15 +3365,10 @@ def d08tailacross(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = T(spark, sf_dir, "events").select("user_id", "event_id")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_tailx_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_snapshot_tail_across")
     src = os.path.join(base, "src")
     dst = os.path.join(base, "dst")
     state = os.path.join(base, "cursor.json")
-    os.makedirs(base)
     snapshot_append(spark, ev.filter(F.col("event_id") % 4 == 0), src)
     snapshot_append(spark, ev.filter(F.col("event_id") % 4 == 1), src)
     df, _, hi, ack = snapshot_tail(spark, src, state)

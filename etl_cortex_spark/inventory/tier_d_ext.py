@@ -19,6 +19,7 @@ from etl_cortex_spark.operators import search as SR
 from etl_cortex_spark.operators import textops as TX
 from etl_cortex_spark.inventory.tier_d import _WORDS, _bucket_sql, _shingles_sql
 from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.layout import scratch_dir
 from etl_cortex_spark.queries import T, query
 
 
@@ -546,17 +547,6 @@ def _probe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dups.unionByName(fresh)
 
 
-def _probe_index_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(), f"spark_graft_ivfprobe_{tag}_{os.getpid()}"
-    )
-
-
 @query(
     "d25_semantic_dedup_probe",
     oracle=f"""
@@ -601,8 +591,6 @@ def d25probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bipartite join in SQL, so the hash match proves cell assignment,
     pruning, and the cosine gate end-to-end; recall vs the unbucketed
     ground truth is certified by `d25_semantic_probe_recall`."""
-    import shutil
-
     from etl_cortex_spark.operators import similarity as SIM
 
     emb = T(spark, sf_dir, "embeddings").select(
@@ -611,8 +599,7 @@ def d25probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding"
         ),
     )
-    path = _probe_index_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "d25_semantic_dedup_probe")
     SIM.write_ivf_index(emb, path, n_planes=6, seed=7)
     out = SIM.ivf_probe_near_dups(
         spark, path, _probe_batch(spark, sf_dir), threshold=0.99,
@@ -656,8 +643,6 @@ def d25probera(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression flips ``recall_ok`` and the hash compare fails. The
     baseline is |batch| × |corpus| bipartite — batch-bounded by
     construction, never corpus²."""
-    import shutil
-
     from etl_cortex_spark.operators import similarity as SIM
     from etl_cortex_spark.operators.similarity import dot, l2norm
 
@@ -689,8 +674,7 @@ def d25probera(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id_n").alias("vec_id"))
         .distinct()
     )
-    path = _probe_index_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "d25_semantic_probe_recall")
     SIM.write_ivf_index(emb, path, n_planes=6, seed=7)
     probed = SIM.ivf_probe_near_dups(
         spark, path, batch, threshold=0.99, n_planes=6, seed=7
@@ -1699,19 +1683,9 @@ def d19idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-time index for a serving workload. The oracle replays the
     postings aggregation + matched-term ranking from the raw corpus —
     equality proves the INDEX holds exactly the corpus's postings (a
-    dropped or doubled posting breaks the hash). Index path carries
-    the pid; the table is rebuilt per call for idempotence."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    dropped or doubled posting breaks the hash)."""
     docs = T(spark, sf_dir, "documents")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_postings_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "d19_postings_index_lookup")
     SR.write_postings_index(docs, path)
     return SR.postings_lookup(spark, path, ["table", "join", "fast"], k=20)
 
@@ -1755,17 +1729,8 @@ def d19inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     they reach the top-k (3 of 20 at sf0.01, rank 1 included), so the
     maintained index's delta visibility is pinned by the hash, not
     just the base postings."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     docs = T(spark, sf_dir, "documents")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_postinc_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "d19_postings_incremental")
     SR.write_postings_index(docs, path)
     delta = docs.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 30_000_000).alias("doc_id"),
@@ -1812,17 +1777,12 @@ def d19stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the index-freshness answer: ingest commits
     versions continuously, serving pins a snapshot per query, and
     nothing ever rebuilds."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.streaming.events import read_table_stream
     from etl_cortex_spark.streaming.ingest import foreach_batch_postings
 
-    h = f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_{os.getpid()}"
-    base = os.path.join(tempfile.gettempdir(), "etl_cortex_spark_postream", h)
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "stream_postings_ingest")
     docs = read_table_stream(spark, sf_dir, "documents").select("doc_id", "text")
     q = foreach_batch_postings(
         docs,

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from etl_cortex_spark.operators.skew import salted_agg, salted_broadcast_left
 from etl_cortex_spark.operators.localframe import local_df
+from etl_cortex_spark.operators.layout import scratch_dir
 from etl_cortex_spark.queries import T, query
 
 
@@ -397,16 +398,9 @@ def scale_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, so the hash match proves pruning loses nothing; the
     pruned-file-count plan proof lives in tests/test_layout.py
     (operators/layout.py:skipping_scan)."""
-    import os
-    import tempfile
-
     from etl_cortex_spark.operators.layout import skipping_scan
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_cortex_spark_skip_{os.getpid()}",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = scratch_dir(sf_dir, "scale_file_skipping")
     (
         T(spark, sf_dir, "orders")
         .repartitionByRange(8, "o_orderdate")
@@ -726,27 +720,14 @@ def scale_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
     mechanism, not the toy-scale timing, is the contract. The oracle
     replays the join with the year derived inline, so the hash match
     proves pruning loses nothing."""
-    import hashlib
-    import os
-    import tempfile
-
-    # full-path hash + pid (the d08-family convention): no aliasing
-    # between same-basename datasets, no cross-process collisions —
-    # and the _SUCCESS check means repeat calls in one process (result
-    # drive, plan test, bench) reuse the layout instead of rewriting it
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_cortex_spark_dpp_{os.getpid()}",
-        hashlib.md5(sf_dir.encode()).hexdigest()[:8],
+    path = scratch_dir(sf_dir, "scale_dynamic_partition_pruning")
+    (
+        T(spark, sf_dir, "orders")
+        .withColumn("o_year", F.year("o_orderdate").cast("int"))
+        .write.mode("overwrite")
+        .partitionBy("o_year")
+        .parquet(path)
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            T(spark, sf_dir, "orders")
-            .withColumn("o_year", F.year("o_orderdate").cast("int"))
-            .write.mode("overwrite")
-            .partitionBy("o_year")
-            .parquet(path)
-        )
     fact = spark.read.parquet(path)
     dim = local_df(
         spark,
@@ -836,22 +817,11 @@ def scale_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     question: reproducible training runs pin a snapshot version while
     ingest keeps committing, with no table rewrite and no read-side
     locking — immutability alone gives snapshot isolation. The oracle
-    replays the cumulative thirds as plain SQL. Index path carries the
-    pid so concurrent harness runs never collide; the table is rebuilt
-    per call for idempotence (re-runs must not stack versions)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    replays the cumulative thirds as plain SQL."""
     from etl_cortex_spark.operators.layout import snapshot_append, snapshot_read
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snap_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_time_travel")
     for third in (0, 1, 2):
         snapshot_append(
             spark, orders.filter(F.col("o_orderkey") % 3 == third), path
@@ -899,11 +869,6 @@ def scale_snapshot_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     intended rows and nothing else. At 100 TB this is the GDPR-erasure
     cost model: rewrite the handful of files a user's rows live in,
     never the table."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_delete,
@@ -911,11 +876,7 @@ def scale_snapshot_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cow_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_cow_delete")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     snapshot_delete(spark, path, F.col("o_orderkey") % 6 == 0)
@@ -959,19 +920,10 @@ def scale_snapshot_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. The pruning itself (files actually read < files in the
     table) is pinned in tests/test_layout.py via inputFiles(); this
     entry pins the VALUES against the plain SQL range replay."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import snapshot_append, snapshot_scan
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapscan_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_pruned_scan")
     for lo_k, hi_k in ((0, 500), (500, 1000), (1000, None)):
         batch = orders.filter(F.col("o_orderkey") >= lo_k)
         if hi_k is not None:
@@ -1011,11 +963,6 @@ def scale_snapshot_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the nightly job every per-batch-committing table needs, and
     making it a COMMIT (not an in-place rewrite) is what keeps pinned
     readers safe while it runs."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_compact,
@@ -1023,11 +970,7 @@ def scale_snapshot_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapcomp_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_compact")
     for lo_k, hi_k in ((0, 500), (500, 1000), (1000, None)):
         batch = orders.filter(F.col("o_orderkey") >= lo_k)
         if hi_k is not None:
@@ -1073,11 +1016,6 @@ def scale_snapshot_partition_evolution(
     on the layout clustering — pruning itself is pinned in
     tests/test_layout.py::test_snapshot_partition_evolution_prunes_both_generations).
     The oracle replays the range filter as plain SQL."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_scan,
@@ -1085,11 +1023,7 @@ def scale_snapshot_partition_evolution(
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapevo_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_partition_evolution")
     snapshot_append(
         spark, orders.filter(F.col("o_orderkey") % 3 == 0), path,
         stats_col="o_orderkey",
@@ -1137,11 +1071,6 @@ def scale_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction and debugging from this view without touching a data
     file. Timestamps are deliberately absent (oracle-unstable;
     `snapshot_version_asof` serves time-keyed lookups)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_compact,
@@ -1151,11 +1080,7 @@ def scale_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snaphist_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_history")
     snapshot_append(
         spark, orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(1), path
     )
@@ -1201,14 +1126,9 @@ def scale_snapshot_compact_small_files(
     a table-sized job at scale, so the selective form is O(|small
     files|) forever. The threshold is derived from the large file's
     actual size, so the split is deterministic at every SF."""
-    import hashlib
-    import json
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
-        _manifests,
         snapshot_append,
         snapshot_compact,
         snapshot_meta,
@@ -1216,11 +1136,7 @@ def scale_snapshot_compact_small_files(
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapsel_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_compact_small_files")
     snapshot_append(
         spark,
         orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(1),
@@ -1278,11 +1194,6 @@ def scale_snapshot_hidden_partitioning(
     filter as plain SQL. At 100 TB this is the Iceberg answer to
     Hive-style partition folders: users never learn the layout, and
     evolving it never rewrites data or queries."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_scan,
@@ -1290,11 +1201,7 @@ def scale_snapshot_hidden_partitioning(
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice", "o_orderdate")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snaphp_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_hidden_partitioning")
     snapshot_append(
         spark, orders.filter(F.col("o_orderkey") % 3 == 0), path,
         stats_col="o_orderdate",
@@ -1344,11 +1251,6 @@ def scale_snapshot_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     — manifest-sized state, zero data rewrite, O(1) in table size.
     File-provenance contract (rewrites re-stamp) pinned in
     tests/test_layout.py."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_delete_mor,
@@ -1356,11 +1258,7 @@ def scale_snapshot_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snaplin_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_row_lineage")
     for third in (0, 1, 2):
         snapshot_append(
             spark, orders.filter(F.col("o_orderkey") % 3 == third), path
@@ -1416,11 +1314,6 @@ def scale_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full pre/post-state oracle the verdict asked for. At 100 TB
     this is the daily-updates cost model: rewrite the files the
     changed keys live in plus O(|batch|) new data, never the table."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_merge,
@@ -1428,11 +1321,7 @@ def scale_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_merge_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_merge")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     updates = orders.filter(F.col("o_orderkey") % 6 == 0).select(
@@ -1496,11 +1385,6 @@ def scale_snapshot_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     APPLIED and cleared): v3 == v4 == the oracle's replay proves the
     deferred and the materialized form agree exactly — the
     COW-vs-MOR equivalence, stated as a hash."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_compact,
@@ -1509,11 +1393,7 @@ def scale_snapshot_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_mormrg_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_merge_mor")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     updates = orders.filter(F.col("o_orderkey") % 6 == 0).select(
@@ -1569,11 +1449,6 @@ def scale_snapshot_scan_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-predicate SQL replay. At 100 TB conjunctive manifest pruning
     is multiplicative: two 10%-selective predicates touch ~1% of
     files, planned from one JSON read."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_scan_multi,
@@ -1582,11 +1457,7 @@ def scale_snapshot_scan_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapmulti_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_scan_multi")
     for key_hi in (False, True):
         for date_hi in (False, True):
             batch = orders.filter(
@@ -1645,22 +1516,13 @@ def scale_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff. At 100 TB this is how downstream ETL and the D112/D113
     index-maintenance paths consume a table: manifest set-arithmetic
     to plan, delta-sized reads to run."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_changes,
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapchg_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_changes")
     for third in (0, 1, 2):
         snapshot_append(
             spark, orders.filter(F.col("o_orderkey") % 3 == third), path
@@ -1701,11 +1563,6 @@ def scale_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves rollback never destroys history (`snapshot_expire` is the
     deletion knob). At 100 TB this is the bad-batch undo: seconds, not
     a table rewrite."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_read,
@@ -1713,11 +1570,7 @@ def scale_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snaprb_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_rollback")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     snapshot_rollback(spark, path, to_version=1)
@@ -1759,11 +1612,6 @@ def scale_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_layout.py. At 100 TB this is the erasure SLA: time
     travel is bounded by retention, and GDPR deletion completes when
     the last referencing manifest expires."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_delete,
@@ -1773,11 +1621,7 @@ def scale_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapexp_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_expire")
     for third in (0, 1, 2):
         snapshot_append(
             spark, orders.filter(F.col("o_orderkey") % 3 == third), path
@@ -1820,10 +1664,7 @@ def scale_changes_downstream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     and order-free — the retract_agg/b22 discipline — and the oracle is
     the full-table recompute: equality proves the incremental path
     converged to the batch answer through two delta applications."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -1834,11 +1675,7 @@ def scale_changes_downstream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_chgagg_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir(sf_dir, "scale_changes_downstream_agg")
     path = os.path.join(base, "table")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
 
@@ -1904,21 +1741,12 @@ def scale_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     table rewrite: old files stay bytes-identical, the manifest keeps
     listing them, and only readers that ask pay the merge-footer
     cost."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import snapshot_append, snapshot_read
 
     orders = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapevo_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_schema_evolution")
     for third in (0, 1):
         snapshot_append(
             spark, orders.filter(F.col("o_orderkey") % 3 == third), path
@@ -2005,11 +1833,6 @@ def scale_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned via inputFiles() in tests/test_layout.py. At 100 TB this is
     the GDPR-locate / record-fetch path: one JSON read + 3·|files| bit
     tests instead of a table scan the range stats can't avoid."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_point_lookup,
@@ -2018,11 +1841,7 @@ def scale_snapshot_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapbloom_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_bloom_lookup")
     for third in (0, 1, 2):
         snapshot_append(
             spark,
@@ -2100,11 +1919,6 @@ def scale_snapshot_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the compaction produce exactly the COW answer. At 100 TB this
     is the write-cheap GDPR path: a same-day erasure costs kilobytes,
     and the weekly OPTIMIZE pays the rewrite once."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_compact,
@@ -2113,11 +1927,7 @@ def scale_snapshot_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_mor_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_mor_delete")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     snapshot_delete_mor(
@@ -2184,11 +1994,6 @@ def scale_snapshot_delete_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer. At 100 TB this is the row-retraction path for PRE-DEDUP
     keyless corpora (crawl shards, event logs): a bad-span retraction
     costs O(|rows named|), never a file rewrite."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_compact,
@@ -2198,11 +2003,7 @@ def scale_snapshot_delete_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_posdel_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_delete_pos")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     snapshot_delete_pos(spark, path, F.col("o_orderkey") % 10 == 1)
@@ -2251,10 +2052,6 @@ def scale_snapshot_bucket_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the id/GDPR-locate path for keys with no range
     locality, without per-file Blooms: one manifest resolve plans the
     probe."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
     from functools import reduce
 
     from etl_cortex_spark.operators.layout import (
@@ -2264,11 +2061,7 @@ def scale_snapshot_bucket_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cust = T(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bktlay_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_bucket_layout")
     snapshot_append(spark, cust.filter(F.col("c_custkey") % 2 == 0), path)
     snapshot_set_layout(path, ("bucket", "c_custkey", 16), files_per_batch=8)
     snapshot_append(spark, cust.filter(F.col("c_custkey") % 2 == 1), path)
@@ -2304,11 +2097,6 @@ def scale_snapshot_cdf_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the plain predicate over orders: a downstream incremental
     consumer (index maintenance, aggregate view) sees precisely the
     retraction set, once, with no key column anywhere in the path."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_changes_cdf,
@@ -2316,11 +2104,7 @@ def scale_snapshot_cdf_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cdfpos_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_cdf_pos")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     snapshot_delete_pos(spark, path, F.col("o_orderkey") % 10 == 1)
@@ -2363,11 +2147,6 @@ def scale_snapshot_zorder_compact(spark: SparkSession, sf_dir: str) -> DataFrame
     OPTIMIZE job: ingest commits in arrival order, the table converges
     to queryable order without ever blocking readers (compaction is
     just another version)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_compact,
@@ -2377,11 +2156,7 @@ def scale_snapshot_zorder_compact(spark: SparkSession, sf_dir: str) -> DataFrame
     orders = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_zoc_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_zorder_compact")
     for third in (0, 1, 2):
         snapshot_append(
             spark, orders.filter(F.col("o_orderkey") % 3 == third), path
@@ -2616,11 +2391,6 @@ def scale_snapshot_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule — "the snapshot the March run trained on" survives the
     vacuum until someone untags it), and untagging makes it expirable
     again. The oracle replays both versions' thirds as plain SQL."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_read_ref,
@@ -2628,11 +2398,7 @@ def scale_snapshot_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snaptag_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_tags")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_tag(path, "golden")  # pins v1
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
@@ -2678,11 +2444,6 @@ def scale_snapshot_changes_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|retracted|), never the table. Rewriting commits still raise
     (content diffs are b23's job). The oracle replays both legs as
     plain SQL with the change-type tag."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_changes_cdf,
@@ -2692,11 +2453,7 @@ def scale_snapshot_changes_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = T(spark, sf_dir, "orders").select(
         "o_orderkey", F.round("o_totalprice", 2).alias("o_totalprice")
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cdf_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_changes_cdf")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 1), path)
     snapshot_delete_mor(spark, path, F.col("o_orderkey") % 6 == 0, "o_orderkey")
@@ -2729,11 +2486,6 @@ def scale_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     invisibility-before-publish and trace-free discard. At 100 TB
     this is how bad batches die BEFORE readers can see them, at
     O(|batch|) cost."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_discard_branch,
@@ -2746,11 +2498,7 @@ def scale_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_wap_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_wap")
     snapshot_append(spark, orders.filter(F.col("o_orderkey") % 3 == 0), path)
 
     def audit_ok(branch: str) -> bool:
@@ -2823,11 +2571,6 @@ def scale_snapshot_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     retraction fold, and the zero-count group-eviction rule at once.
     Cites the reference's silver→gold recompute loop (app.py) as the
     pattern this replaces at scale."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_changes_cdf,
@@ -2844,11 +2587,7 @@ def scale_snapshot_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 8).cast("bigint").alias("grp"),
         F.col("value").cast("decimal(18,6)").alias("x"),
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cdfmv_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_cdf_mv")
     snapshot_append(spark, ev.filter(F.col("event_id") % 3 < 2), path)
     mv = build_rollup(snapshot_read(spark, path, version=1), ["grp"], ["x"])
     snapshot_append(spark, ev.filter(F.col("event_id") % 3 == 2), path)
@@ -2893,10 +2632,7 @@ def scale_snapshot_cdf_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     the retraction reads exactly the files the rollback dropped
     (still on disk until `snapshot_expire`), never the table. BIGINT
     measures ⇒ exact partials ⇒ hash-exact parity."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -2912,12 +2648,7 @@ def scale_snapshot_cdf_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         (F.col("user_id") % 8).cast("bigint").alias("grp"),
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cdfrb_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = scratch_dir(sf_dir, "scale_snapshot_cdf_rollback")
     path = os.path.join(base, "tbl")
     state = os.path.join(base, "cursor.json")
     snapshot_append(spark, ev.filter(F.col("event_id") % 3 == 0), path)
@@ -2975,10 +2706,7 @@ def scale_snapshot_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     (clone-side expire can never touch source files; source-side
     expire breaking shallow clones = Delta's VACUUM hazard; deep
     clones immune) are pinned in tests/test_layout_r19.py."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -2987,12 +2715,7 @@ def scale_snapshot_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = T(spark, sf_dir, "events").select("event_id", "user_id")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_clone_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = scratch_dir(sf_dir, "scale_snapshot_clone")
     src = os.path.join(base, "src")
     dst = os.path.join(base, "clone")
     snapshot_append(spark, ev.filter(F.col("event_id") % 4 == 0), src)
@@ -3040,11 +2763,6 @@ def scale_snapshot_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-window, raw DataSources) refuses loudly until
     `snapshot_materialize_renames` folds the names in — contracts
     pinned in tests/test_layout_r19.py."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_read,
@@ -3052,11 +2770,7 @@ def scale_snapshot_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = T(spark, sf_dir, "events").select("user_id", "event_id")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_rename_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_rename")
     snapshot_append(spark, ev.filter(F.col("event_id") % 2 == 0), path)
     snapshot_rename_column(path, "event_id", "eid")
     snapshot_append(
@@ -3099,11 +2813,6 @@ def scale_snapshot_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatch — the oracle pins the drop's read-side exclusion,
     not just the schema shape. Kept columns aggregate over all three
     generations unchanged."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_drop_column,
@@ -3113,11 +2822,7 @@ def scale_snapshot_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = T(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type"
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_dropcol_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_drop_column")
     snapshot_append(spark, ev.filter(F.col("event_id") % 2 == 0), path)
     snapshot_drop_column(path, "event_type")
     snapshot_append(
@@ -3164,11 +2869,6 @@ def scale_snapshot_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_stamp_recent_batches` carry; write-path refusals for
     merge/merge_mor/WAP and NULL-passes semantics are pinned in
     tests/test_layout_r19.py."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
         snapshot_read,
@@ -3176,11 +2876,7 @@ def scale_snapshot_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = T(spark, sf_dir, "events").select("user_id", "event_id")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_constr_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_constraints")
     snapshot_append(spark, ev.filter(F.col("event_id") % 3 == 0), path)
     snapshot_set_constraint(spark, path, "nonneg", "event_id >= 0")
     poisoned = ev.filter(F.col("event_id") % 3 == 1).withColumn(
@@ -3230,11 +2926,6 @@ def scale_snapshot_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     miskeyed file) silently drops or duplicates a boundary file and
     hash-mismatches. Replacement-segment discipline and affected-only
     rewrites pinned in tests/test_layout_r19.py."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import (
         snapshot_analyze,
         snapshot_append,
@@ -3245,11 +2936,7 @@ def scale_snapshot_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     mink, maxk = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_analyze_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "scale_snapshot_analyze")
     bounds = [mink - 1, maxk // 4, maxk // 2, (3 * maxk) // 4, maxk]
     for lo, hi in zip(bounds, bounds[1:]):
         snapshot_append(

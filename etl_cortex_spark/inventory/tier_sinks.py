@@ -6,26 +6,18 @@ oracle is a plain SELECT over the source table. A hash match therefore
 proves the write+read cycle is lossless (values, types, NULLs), which
 is the property a sink owes its users.
 
-Outputs land under a per-(query, sf) temp dir — overwritten each run,
-never committed.
+Outputs land in the entry's `layout.scratch_dir`, emptied on each call
+and reclaimed once the writing process is dead.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_cortex_spark.operators.layout import scratch_dir
 from etl_cortex_spark.queries import T, query
 from etl_cortex_spark.sinks.files import write_csv, write_parquet
-
-
-def _out_dir(tag: str, sf_dir: str) -> str:
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), "etl_cortex_spark_sinks", f"{tag}_{h}")
 
 
 @query(
@@ -44,7 +36,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") <= 5000)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     )
-    path = _out_dir("pq", sf_dir)
+    path = scratch_dir(sf_dir, "sink_parquet_partitioned_roundtrip")
     write_parquet(src, path, partition_by=["o_orderstatus"])
     back = spark.read.parquet(path)
     # partition columns come back as the last column; restore order and
@@ -66,7 +58,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9: CSV write + schema-preserving read-back."""
     src = T(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    path = _out_dir("csv", sf_dir)
+    path = scratch_dir(sf_dir, "sink_csv_roundtrip")
     write_csv(src, path, coalesce_to=1)
     return (
         spark.read.option("header", True)
@@ -90,7 +82,7 @@ def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = T(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", F.round("s_acctbal", 2).alias("s_acctbal")
     )
-    path = _out_dir("orc", sf_dir)
+    path = scratch_dir(sf_dir, "sink_orc_roundtrip")
     src.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -105,7 +97,7 @@ def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines write + schema-enforced read-back (the interchange
     sink: every row a self-describing document)."""
     src = T(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    path = _out_dir("json", sf_dir)
+    path = scratch_dir(sf_dir, "sink_json_roundtrip")
     src.write.mode("overwrite").json(path)
     return spark.read.schema("r_regionkey bigint, r_name string").json(path)
 
@@ -125,7 +117,7 @@ def sink_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus stats must equal the source table's (lossless: corpus text
     contains no newlines by construction)."""
     docs = T(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    path = _out_dir("txt", sf_dir)
+    path = scratch_dir(sf_dir, "sink_text_gzip_roundtrip")
     docs.select("text").write.mode("overwrite").option(
         "compression", "gzip"
     ).text(path)
@@ -151,7 +143,7 @@ def sink_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     XML is row-per-element text: splittable by element at scale the
     same way json-lines is by line."""
     src = T(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    path = _out_dir("xml", sf_dir)
+    path = scratch_dir(sf_dir, "sink_xml_roundtrip")
     src.write.mode("overwrite").option("rowTag", "row").format("xml").save(path)
     return (
         spark.read.schema("n_nationkey bigint, n_name string, n_regionkey bigint")
@@ -182,13 +174,7 @@ def sink_parquet_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     widened table. At scale mergeSchema's footer sweep is the cost —
     production pins the merged schema in a catalog; the read path
     here proves the engine semantics."""
-    import shutil
-
-    # pid in the path (the round-4 d08d rule): this entry APPENDS after
-    # an rmtree, so two concurrent harness runs sharing a dir would
-    # double the rows rather than just race the overwrite
-    path = _out_dir(f"evo_{os.getpid()}", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "sink_parquet_schema_evolution")
     src = T(spark, sf_dir, "orders")
     v1 = src.filter(F.col("o_orderkey") <= 2500).select("o_orderkey", "o_custkey")
     v2 = src.filter(
@@ -302,11 +288,6 @@ def pyds_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded availableNow run drains all of them; the oracle replays
     the union as plain SQL. Pytest drives the multi-batch walk: a
     second stream pinned to start_version sees ONLY later commits."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import snapshot_append
     from etl_cortex_spark.sources.pyds import register_snapshot_stream
     from etl_cortex_spark.streaming.events import run_to_memory
@@ -314,11 +295,7 @@ def pyds_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 600).select(
         "o_orderkey", F.round("o_totalprice", 2).alias("o_totalprice")
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapstream_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "pyds_stream_snapshot_changes")
     for third in (0, 1, 2):
         snapshot_append(
             spark, orders.filter(F.col("o_orderkey") % 3 == third), path
@@ -361,10 +338,7 @@ def pyds_tail_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the offset walk, the rate-limit cuts, the
     checkpoint resume and the ledger dedup together lost and doubled
     nothing."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -373,12 +347,7 @@ def pyds_tail_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_cortex_spark.sources.pyds import register_snapshot_tail_stream
 
     ev = T(spark, sf_dir, "events").select("user_id", "event_id")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_tailpyds_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = scratch_dir(sf_dir, "pyds_stream_snapshot_tail")
     src = os.path.join(base, "src")
     dst = os.path.join(base, "dst")
     ckpt = os.path.join(base, "ckpt")
@@ -480,10 +449,7 @@ def pyds_tail_stream_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger-guarded downstream and a skip would lose them).
     foreachBatch commits with `snapshot_append(batch_id=<engine
     id>)`, the sinks' exactly-once composition."""
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from etl_cortex_spark.operators.layout import (
         snapshot_append,
@@ -494,12 +460,7 @@ def pyds_tail_stream_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = T(spark, sf_dir, "events").select("user_id", "event_id")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_taildist_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
+    base = scratch_dir(sf_dir, "pyds_stream_snapshot_tail_dist")
     src = os.path.join(base, "src")
     dst = os.path.join(base, "dst")
     ckpt = os.path.join(base, "ckpt")
@@ -574,11 +535,6 @@ def pyds_batch_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned scan must equal plain SQL over the whole table — pruning
     that changed a result would hash-mismatch here (the conservative-
     keep contract, pinned structurally in tests/test_layout_r19.py)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from etl_cortex_spark.operators.layout import snapshot_append
     from etl_cortex_spark.sources.pyds import register_snapshot_batch
 
@@ -587,11 +543,7 @@ def pyds_batch_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mink, maxk = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     cut = maxk // 2
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_snapbatch_{tag}_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir(sf_dir, "pyds_batch_snapshot_pruned")
     # slices are (lo, hi]: start below the true minimum (sf lineitem
     # keys start at 0, not 1) so the first slice keeps every low row
     bounds = [mink - 1, maxk // 4, cut, (3 * maxk) // 4, maxk]

@@ -24,6 +24,7 @@ is unwanted.
 
 from __future__ import annotations
 
+import logging
 from collections import deque
 
 from pyspark.sql import DataFrame
@@ -32,6 +33,8 @@ from pyspark.sql import DataFrame
 CACHE_CAP = 8
 
 _TRACKED: deque[DataFrame] = deque()
+
+_log = logging.getLogger(__name__)
 
 
 def _drop(df: DataFrame) -> None:
@@ -72,8 +75,8 @@ def track(df: DataFrame) -> DataFrame:
                     return df
             except Exception:
                 continue  # dead-context frame: not a match, leave for eviction
-    except Exception:
-        pass
+    except Exception as e:
+        _log.warning("cache dedup skipped, frame tracked as new: %r", e)
     _TRACKED.append(df)
     while len(_TRACKED) > CACHE_CAP:
         _drop(_TRACKED.popleft())

@@ -217,14 +217,16 @@ def bucketed_fact_name(
 
 
 def sweep_dead_pid_layouts(wh: str) -> list[str]:
-    """Garbage-collect warehouse layout dirs owned by DEAD processes
+    """Garbage-collect the directories of DEAD processes under ``wh``
     (round-8 verdict #3: the pid suffix protects live siblings from
     rmtree races, but nothing ever reclaimed a dead pid's tables, so
     every pytest/bench/driver process left permanent full-table debris
-    — 1 GB accumulated by round 8). Matches only the pid-suffixed
-    conventions (``bktf_<table>_<8-hex-sig>_<pid>`` from
-    ``bucketed_fact_name`` and the older ``bkt_<table>_<8-hex-sig>_
-    <pid>``); stable-named dirs are never touched. ``os.kill(pid, 0)``
+    — 1 GB accumulated by round 8). Matches only the pid-named
+    conventions: warehouse layouts (``bktf_<table>_<8-hex-sig>_<pid>``
+    from ``bucketed_fact_name``, the older ``bkt_…`` and the
+    ``dimf_…`` dims) and the per-process scratch roots
+    ``spark_graft_<pid>`` that ``scratch_dir`` makes in the temp dir;
+    stable-named dirs are never touched. ``os.kill(pid, 0)``
     probes liveness — ``PermissionError`` means ALIVE (another user's
     process), so only ``ProcessLookupError`` deletes. Returns the
     removed names (test hook).
@@ -244,7 +246,9 @@ def sweep_dead_pid_layouts(wh: str) -> list[str]:
     except OSError:
         return removed
     for d in entries:
-        m = re.match(r"^(?:bktf?|dimf)_\w+_[0-9a-f]{8}_(\d+)$", d)
+        m = re.match(
+            r"^(?:(?:bktf?|dimf)_\w+_[0-9a-f]{8}_|spark_graft_)(\d+)$", d
+        )
         if not m:
             continue
         pid = int(m.group(1))
@@ -258,6 +262,32 @@ def sweep_dead_pid_layouts(wh: str) -> list[str]:
         except (PermissionError, OSError):
             pass  # alive (other user) / unprobeable: never delete
     return removed
+
+
+def scratch_dir(sf_dir: str, name: str) -> str:
+    """An empty directory for the files registry entry ``name`` writes
+    over the data in ``sf_dir``:
+    ``<temp dir>/spark_graft_<pid>/<name>_<md5(abspath(sf_dir))[:8]>``.
+    Whatever an earlier call left there is removed first. The pid root
+    keeps concurrent processes apart; the entry name keeps two entries
+    from deleting files a lazy frame of the other still reads. Making
+    the root (once per process) sweeps the roots of dead processes, so
+    scratch data lives as long as the process that wrote it."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    tmp = tempfile.gettempdir()
+    root = os.path.join(tmp, f"spark_graft_{os.getpid()}")
+    if not os.path.isdir(root):
+        sweep_dead_pid_layouts(tmp)
+        os.makedirs(root, exist_ok=True)
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    path = os.path.join(root, f"{name}_{tag}")
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
 
 
 def bucketed_fact(
@@ -454,8 +484,8 @@ def bucketed_fact_with_delta(
                 # from scratch instead of serving a half-maintained layout.
                 try:
                     spark.sql(f"DROP TABLE IF EXISTS {name}")
-                except Exception:
-                    pass
+                except Exception as e:
+                    _log.warning("partial layout %s not dropped: %r", name, e)
                 shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
                 raise
         return spark.table(name)

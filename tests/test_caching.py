@@ -147,8 +147,14 @@ def test_sweep_dead_pid_layouts(tmp_path):
         "bktf_orders_0fd96e3c_1",  # pid 1: always alive
         "bkt_lineitem_sf0_001",  # legacy stable name (no hex sig)
         "some_other_table",  # not a layout dir at all
+        f"spark_graft_{os.getpid()}",  # own scratch_dir root
+        "spark_graft_sf1",  # stable name (bench_slope's data dir)
     ]
-    dead = [f"bktf_lineitem_d0893a45_{dead_pid}", f"bkt_orders_a1e8d12c_{dead_pid}"]
+    dead = [
+        f"bktf_lineitem_d0893a45_{dead_pid}",
+        f"bkt_orders_a1e8d12c_{dead_pid}",
+        f"spark_graft_{dead_pid}",  # a dead process's scratch_dir root
+    ]
     for d in keep + dead:
         (tmp_path / d / "part").mkdir(parents=True)
     removed = sweep_dead_pid_layouts(str(tmp_path))
@@ -157,6 +163,48 @@ def test_sweep_dead_pid_layouts(tmp_path):
     # idempotent + tolerant of a missing dir
     assert sweep_dead_pid_layouts(str(tmp_path)) == []
     assert sweep_dead_pid_layouts(str(tmp_path / "nope")) == []
+
+
+@pytest.mark.parametrize(
+    "held, rebuilt",
+    [
+        ("scale_snapshot_partition_evolution", "scale_snapshot_schema_evolution"),
+        ("d25_semantic_dedup_probe", "d25_semantic_probe_recall"),
+    ],
+)
+def test_scratch_dirs_are_per_entry(spark, held, rebuilt):
+    """Building one entry must not delete the files a lazy frame of
+    another entry still reads: each pair below once shared one scratch
+    path, so collecting ``held`` after building ``rebuilt`` failed with
+    FAILED_READ_FILE.FILE_NOT_EXIST."""
+    from etl_cortex_spark.queries import ORACLE, QUERIES
+    from tests.oracle import run_pair
+
+    frame = QUERIES[held](spark, SF)
+    QUERIES[rebuilt](spark, SF).collect()
+    run_pair(spark, SF, held, lambda *_: frame, ORACLE[held])
+
+
+def test_track_logs_a_failed_dedup(caplog):
+    """A frame whose plan cannot be analyzed skips the same-plan dedup:
+    it is tracked as new, and the warning names the exception."""
+    import logging
+
+    class _Plan:
+        def queryExecution(self):
+            raise RuntimeError("analysis failed")
+
+    class _Frame:
+        _jdf = _Plan()
+
+        def unpersist(self, blocking=False):
+            pass
+
+    frame = _Frame()
+    with caplog.at_level(logging.WARNING, logger=caching.__name__):
+        assert track(frame) is frame
+    assert caching._TRACKED[-1] is frame
+    assert "analysis failed" in caplog.text
 
 
 def test_fact_buckets_sizing(tmp_path):

@@ -999,18 +999,31 @@ def test_no_inline_single_partition_sort_outside_bounded_sort():
 def test_inventory_builders_have_unique_names():
     """Source guard: no inventory module defines a top-level function
     twice. The registry keeps both builders through ``@query``, but the
-    module attribute and tracebacks name only the later one."""
+    module attribute and tracebacks name only the later one. In the
+    same pass, no two ``scratch_dir`` calls pass the same literal name:
+    two entries sharing a scratch directory delete each other's files."""
     import ast
     import collections
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parents[1] / "etl_cortex_spark" / "inventory"
     dups = {}
+    scratch = collections.Counter()
     for p in sorted(root.glob("*.py")):
+        tree = ast.parse(p.read_text())
         names = collections.Counter(
             node.name
-            for node in ast.parse(p.read_text()).body
+            for node in tree.body
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
         )
         dups.update({f"{p.name}:{n}": c for n, c in names.items() if c > 1})
+        scratch.update(
+            node.args[1].value
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "scratch_dir"
+            and len(node.args) == 2
+            and isinstance(node.args[1], ast.Constant)
+        )
+    dups.update({f"scratch_dir:{n}": c for n, c in scratch.items() if c > 1})
     assert dups == {}, dups
